@@ -1959,12 +1959,13 @@ def _q_valid_counts(spark, sf_dir):
 # Each of the four "probabilistic" operators is deterministic given its
 # seed, and its output has an exact relational definition the oracle can
 # compute directly:
-#   * minhash_dedup verifies candidates with EXACT shingle Jaccard, and
-#     banding recall on this corpus is total (verified at sf0.001/0.01:
-#     output == all-pairs exact Jaccard ≥ threshold), so the oracle is
-#     the same inverted-index SQL that gates docs_jaccard;
+#   * minhash_dedup verifies every candidate with EXACT shingle Jaccard
+#     inside its LSH bucket stage, and banding recall on this corpus is
+#     total (verified at sf0.001/0.01: output == all-pairs exact
+#     Jaccard ≥ threshold), so the oracle is the same inverted-index SQL
+#     that gates docs_jaccard;
 #   * simhash pigeonhole banding GUARANTEES recall at the requested
-#     radius (dedup.py:357-364), so the output is exactly the Hamming
+#     radius (`dedup.simhash_near_pairs`), so the output is exactly the Hamming
 #     ball — the oracle recomputes the 64-bit signatures in DuckDB SQL
 #     (Horner polynomial + splitmix64 under emulated 2^64 wraparound,
 #     validated bit-exact against `_token_hashes`) and brute-forces

@@ -48,17 +48,14 @@ def bench_minhash(spark) -> None:
     spark.sparkContext.setJobDescription("minhash: signatures only")
     timed("signatures", lambda: noop(D.minhash_signatures(docs, "t", "id", 64, 5)))
     sigs = D.minhash_signatures(docs, "t", "id", 64, 5)
-    banded = D._banded_sigs(sigs, 16, 4)
-    spark.sparkContext.setJobDescription("minhash: banded explode")
-    timed("banded", lambda: noop(banded))
-    est_min = max(0, 500 - 150) * 64
-    spark.sparkContext.setJobDescription("minhash: bucket pairs + est")
-    cand = D._bucket_pairs_est(banded, 64, est_min, dedup=False)
-    timed("bucket_pairs_est", lambda: noop(cand))
-    spark.sparkContext.setJobDescription("minhash: core (no collapse)")
+    spark.sparkContext.setJobDescription("minhash: signatures + LSH candidates")
+    timed("lsh_candidates", lambda: noop(D.minhash_lsh_candidates(sigs, 16, 4)))
+    spark.sparkContext.setJobDescription("minhash: full (no collapse)")
     timed(
-        "pairs_core",
-        lambda: noop(D._minhash_pairs_core(docs, 64, 16, 500, 5, None)),
+        "no_collapse_minhash_dedup",
+        lambda: noop(
+            D.minhash_dedup(docs, "t", "id", threshold_milli=500, collapse_exact=False)
+        ),
     )
     spark.sparkContext.setJobDescription("minhash: full (collapse)")
     timed(

@@ -7,8 +7,9 @@ the full corpus (except the explicitly-bounded exact-Jaccard verifier).
 
 Scale notes (10^12 docs):
 * exact: one shuffle on a 256-bit content hash (tiny keys);
-* MinHash LSH: shingles → signatures is map-side only; candidate
-  generation shuffles (band_hash) pairs within small buckets;
+* MinHash LSH: shingles → signatures is map-side only; one shuffle on
+  (band, band_hash) then generates, estimates and exact-verifies the
+  pairs inside each bucket;
 * SimHash: map-side signature, self-join on rotated prefix buckets;
 * all tie-breaks are total orders (min doc_id) ⇒ deterministic
   survivors under any parallelism (same guarantee as mosaic_dedup).
@@ -18,10 +19,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -125,6 +126,39 @@ def _spread_for_udf(df: DataFrame, key_col: str) -> DataFrame:
     return df.repartition(target, F.col(key_col))
 
 
+def _signature_udf(num_perm: int, w: int, seed: int = 42):
+    """Arrow-batched pandas UDF text → MinHash signature (array<long>)
+    over the UTF-8 byte ``w``-shingles; per document every window's
+    polynomial hash comes from a ``w``-step Horner recurrence over
+    shifted byte arrays (zero per-byte Python) and the permutation mins
+    are one (num_perm × shingles) matrix op."""
+    a, b = _minhash_params(num_perm, seed)
+    a_u = a[:, None].astype(np.uint64)
+    b_u = b[:, None].astype(np.uint64)
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def sig(texts: pd.Series) -> pd.Series:
+        out = []
+        for t in texts:
+            raw = (t or "").encode("utf-8")
+            if len(raw) < w:
+                raw = raw + b"\x00" * (w - len(raw))
+            arr = np.frombuffer(raw, dtype=np.uint8).astype(np.uint64)
+            m = len(arr) - w + 1
+            # window i hashes to Σ_j byte[i+j]·base^j (mod 2^64), Horner
+            # from the last byte of the window
+            hv = np.zeros(m, dtype=np.uint64)
+            with np.errstate(over="ignore"):  # uint64 wraparound is the hash's modulus
+                for j in range(w - 1, -1, -1):
+                    hv = hv * _POLY_BASE + arr[j : j + m]
+            hv = np.unique(hv) & np.uint64(0x7FFFFFFFFFFFFFFF)
+            mins = ((a_u * hv[None, :] + b_u) % np.uint64(_MERSENNE)).min(axis=1)
+            out.append(mins.astype(np.int64))
+        return pd.Series(out)
+
+    return sig
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -133,43 +167,10 @@ def minhash_signatures(
     w: int = 5,
     seed: int = 42,
 ) -> DataFrame:
-    """(id, sig: array<long>) — MinHash over character shingles.
-
-    Arrow-batched pandas UDF; per document the shingle hashing is a
-    numpy sliding-window polynomial hash (zero per-byte Python) and the
-    permutation mins are one (num_perm × shingles) matrix op.
-    Map-side only — no shuffle (beyond the small-input spread,
-    :func:`_spread_for_udf`)."""
-    a, b = _minhash_params(num_perm, seed)
-    a_u = a[:, None].astype(np.uint64)
-    b_u = b[:, None].astype(np.uint64)
-    # polynomial rolling-hash weights (mod 2^64 wraparound)
-    base = np.uint64(1099511628211)
-    weights = np.empty(w, dtype=np.uint64)
-    weights[0] = 1
-    with np.errstate(over="ignore"):  # uint64 wraparound is the hash's modulus
-        for i in range(1, w):
-            weights[i] = weights[i - 1] * base
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig(texts: pd.Series) -> pd.Series:
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        out = []
-        for t in texts:
-            raw = (t or "").encode("utf-8")
-            if len(raw) < w:
-                raw = raw + b"\x00" * (w - len(raw))
-            wins = sliding_window_view(np.frombuffer(raw, dtype=np.uint8), w)
-            hv = np.unique(
-                (wins.astype(np.uint64) * weights[None, :]).sum(
-                    axis=1, dtype=np.uint64
-                )
-            ) & np.uint64(0x7FFFFFFFFFFFFFFF)
-            mins = ((a_u * hv[None, :] + b_u) % np.uint64(_MERSENNE)).min(axis=1)
-            out.append(mins.astype(np.int64))
-        return pd.Series(out)
-
+    """(id, sig: array<long>) — MinHash over character shingles
+    (:func:`_signature_udf`).  Map-side only — no shuffle (beyond the
+    small-input spread, :func:`_spread_for_udf`)."""
+    sig = _signature_udf(num_perm, w, seed)
     df = _spread_for_udf(df, id_col)
     return df.select(F.col(id_col).alias("id"), sig(F.col(text_col)).alias("sig"))
 
@@ -246,6 +247,15 @@ def _cap_buckets(banded: DataFrame, keys: list[str], cap: int) -> DataFrame:
     )
 
 
+def _band_hashes(sig: str, bands: int, rows_per_band: int) -> Column:
+    """array<int> of the ``bands`` LSH bucket hashes of a signature —
+    band i hashes signature rows [i·r, (i+1)·r)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda i: F.hash(F.slice(sig, i * rows_per_band + 1, rows_per_band)),
+    )
+
+
 def minhash_lsh_candidates(
     sigs: DataFrame,
     bands: int = 16,
@@ -260,13 +270,7 @@ def minhash_lsh_candidates(
     which removes the *guaranteed* hot buckets (identical docs collide
     in every band) without any recall loss."""
     banded = sigs.select(
-        "id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(F.slice("sig", i * rows_per_band + 1, rows_per_band)),
-            )
-        ).alias("band", "bh"),
+        "id", F.posexplode(_band_hashes("sig", bands, rows_per_band)).alias("band", "bh")
     )
     if bucket_cap is not None:
         banded = _cap_buckets(banded, ["band", "bh"], bucket_cap)
@@ -279,125 +283,194 @@ def minhash_lsh_candidates(
     )
 
 
-def _banded_sigs(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """(id, sig, band, bh) — one row per (document, band) with the
-    band's bucket hash; the full signature rides along for the fused
-    estimate (see :func:`_bucket_pairs_est`)."""
-    return sigs.select(
-        "id",
-        "sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(
-                    F.slice("sig", i * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("band", "bh"),
-    )
+def _shingle_hash_set(t: str, w: int) -> np.ndarray:
+    """Sorted distinct 64-bit polynomial hashes of the character
+    ``w``-shingles of ``t`` (the whole string when shorter than ``w`` —
+    same membership rule as :func:`shingles`).
+
+    Characters are the UTF-32 code points, so windows match Python
+    string slicing exactly; every window is hashed at once by a
+    ``w``-step Horner recurrence over shifted code-point arrays — no
+    per-shingle Python."""
+    cps = np.frombuffer((t or "").encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
+    k = min(w, len(cps))  # window width
+    m = len(cps) - k + 1  # window count (1 for a short or empty text)
+    h = np.zeros(m, dtype=np.uint64)
+    with np.errstate(over="ignore"):  # uint64 wraparound is the hash's modulus
+        for j in range(k):
+            h = h * _POLY_BASE + cps[j : j + m]
+    return np.unique(h)
 
 
-def _bucket_pairs_est(
-    banded: DataFrame, num_perm: int, est_min: int, dedup: bool = True
+def _set_intersections(
+    hsets: list[np.ndarray], ca: np.ndarray, cb: np.ndarray
+) -> np.ndarray:
+    """|hsets[ca[k]] ∩ hsets[cb[k]]| for every k (sorted distinct
+    uint64 sets, none empty).  Pairs are grouped by their left set;
+    each group's right-hand sets are gathered from one flat
+    concatenation with a vectorized repeat/arange index and probed with
+    ONE ``searchsorted`` + ``add.reduceat`` — no per-pair numpy calls.
+    The gathered probe is cut into pieces of about 4M elements (32 MB),
+    so a hot bucket's millions of pairs never materialize at once."""
+    budget = 1 << 22
+    sizes = np.fromiter((h.size for h in hsets), np.int64, len(hsets))
+    flat = np.concatenate(hsets)
+    offs = np.concatenate(([0], np.cumsum(sizes)[:-1]))
+    run = np.argsort(ca, kind="stable")
+    cum = np.cumsum(sizes[cb[run]])
+    out = np.empty(len(ca), dtype=np.int64)
+    pos = 0
+    while pos < len(run):
+        end = max(pos + 1, int(np.searchsorted(cum, cum[pos] + budget)))
+        piece = run[pos:end]
+        pa, pb = ca[piece], cb[piece]
+        lens = sizes[pb]
+        bound = np.concatenate(([0], np.cumsum(lens)))
+        probe = flat[np.repeat(offs[pb] - bound[:-1], lens) + np.arange(bound[-1])]
+        cuts = np.nonzero(np.diff(pa))[0] + 1
+        got = np.empty(len(piece), dtype=np.int64)
+        for gs, ge in zip(
+            np.concatenate(([0], cuts)), np.concatenate((cuts, [len(piece)]))
+        ):
+            ha = hsets[pa[gs]]
+            seg = probe[bound[gs] : bound[ge]]
+            loc = np.searchsorted(ha, seg)
+            loc[loc == ha.size] = 0  # any in-range slot; equality decides
+            eq = (ha[loc] == seg).astype(np.int64)
+            got[gs:ge] = np.add.reduceat(eq, bound[gs:ge] - bound[gs])
+        out[piece] = got
+        pos = end
+    return out
+
+
+def _bucket_pairs(
+    banded: DataFrame, num_perm: int, threshold_milli: int, w: int
 ) -> DataFrame:
-    """LSH buckets → distinct candidate pairs that ALSO pass the
-    signature-agreement estimate, in ONE stage.
+    """LSH buckets → exact-verified near-dup pairs (id_a, id_b, inter,
+    uni), each pair born, estimated, verified and emitted inside ONE
+    bucket stage.
 
-    Replaces the candidate self-join + distinct + two signature
-    re-joins + zip_with filter chain.  That plan shuffled every raw
-    bucket collision three times (measured 47.1M collision pairs on
-    the sf1.0 corpus for 7.9M estimate survivors and 2.5k true pairs)
-    and its hottest bucket (4.7k members ⇒ 11.2M pairs) was emitted
-    and estimated by a single join task — the 199/200-straggler shape
-    of guide §2.5, unsplittable because the skew is join-OUTPUT
-    explosion, which AQE's skew handling cannot touch.
+    ``banded`` holds one row per (document, band): id, text ``t``, the
+    full signature ``sig``, the doc's band-hash array ``bhs`` and the
+    row's (band, bh) bucket key.  After one repartition on the bucket
+    key every worker holds whole buckets and, per partition:
 
-    Here each bucket is processed as one numpy block: pairwise
-    signature match-counts via ``num_perm`` vectorized
-    equality-outer-products (uint8 accumulate, row-chunked so memory
-    is O(chunk × bucket)), and only pairs with
-    ``matches * 1000 >= est_min`` are ever materialized — the 47M
-    collision pairs become array scans inside the workers and the
-    shuffle carries just the 16-byte survivors (guide §2.3 "shuffle
-    keys and metadata, decide before you move").  The estimate is a
-    pure function of the two signatures, so filtering before the
-    pair-level distinct is output-identical to filtering after.
+    * groups rows into buckets with one sort; singleton buckets are
+      dropped before any signature is unpacked;
+    * estimates: a pair survives when its full signatures agree in at
+      least ``ceil((threshold_milli - 150) · num_perm / 1000)``
+      positions (the margin keeps the false-negative probability < 1%
+      at 64 perms).  Buckets up to 64 members run as one vectorized
+      pass per bucket size; larger ones as a dense outer-product
+      accumulation over signature columns factorized within the bucket
+      (a column constant over the bucket folds into the threshold, an
+      all-distinct one is skipped, the rest compare as narrow codes —
+      the pass is memory-bound, so code width is wall clock);
+    * keeps a pair only in the LOWEST band where the two docs' band
+      hashes agree, so a pair colliding in several bands is emitted
+      once and no pair-level distinct is needed;
+    * verifies exact character-shingle Jaccard from shingle hash sets
+      built from the texts of the surviving pairs only (one build per
+      distinct text per partition) and emits the pairs with
+      ``inter · 1000 >= threshold_milli · uni``.
 
-    The hot bucket's block is ~bucket²·num_perm byte-ops of
-    sequential numpy (about 1.4e9 for the sf1.0 hot bucket — well
-    under a second) instead of 11M codegen'd zip_with evaluations, so
-    the straggler disappears without salting."""
-    # matches*1000 >= est_min  ⇔  matches >= ceil(est_min/1000)
+    A pair's output is a pure function of its two texts, so it is
+    independent of partitioning and of the band it was found in."""
+    est_min = max(0, threshold_milli - 150) * num_perm
     min_matches = -(-est_min // 1000)
     acc_t = np.uint8 if num_perm <= 255 else np.uint16
     schema = T.StructType(
         [
             T.StructField("id_a", T.LongType()),
             T.StructField("id_b", T.LongType()),
+            T.StructField("inter", T.LongType()),
+            T.StructField("uni", T.LongType()),
         ]
     )
-
-    # buckets above this size use the outer-product path; smaller ones
-    # are batched per size class so a partition's hundreds of thousands
-    # of 2-10-member buckets cost a handful of numpy calls, not 64
-    # tiny allocations each
+    # buckets above this size use the dense outer-product estimate;
+    # smaller ones are batched per size class so a partition's many
+    # 2-10-member buckets cost a handful of numpy calls
     big_n = 64
+    chunk = 1 << 16  # explicit pairs gathered at once (× num_perm longs)
 
-    def gen(it):
-        frames = list(it)
-        if not frames:
+    def gen(batches):
+        # Arrow in, Arrow out: the list columns unpack as flat numpy
+        # buffers (no per-row objects) and only rows of multi-member
+        # buckets are ever gathered
+        batches = list(batches)
+        n_rows = sum(b.num_rows for b in batches)
+        if not n_rows:
             return
-        df = pd.concat(frames, ignore_index=True)
-        if df.empty:
-            return
-        # group the partition's rows into buckets: sort by (band, bh)
-        key = df["band"].to_numpy(np.int64) * np.int64(1 << 33) + (
-            df["bh"].to_numpy(np.int64) + np.int64(1 << 32)
+        tbl = pa.Table.from_batches(batches)
+        key = tbl.column("band").to_numpy().astype(np.int64) * np.int64(1 << 33) + (
+            tbl.column("bh").to_numpy().astype(np.int64) + np.int64(1 << 32)
         )
         order = np.argsort(key, kind="stable")
         key = key[order]
-        ids = df["id"].to_numpy(np.int64)[order]
-        sig_mat = np.vstack(df["sig"].to_numpy()[order]).astype(np.int64)
-        bounds = np.nonzero(np.diff(key))[0] + 1
-        seg_starts = np.concatenate(([0], bounds))
-        sizes = np.diff(np.concatenate((seg_starts, [len(key)])))
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
+        starts = np.concatenate(([0], np.nonzero(np.diff(key))[0] + 1))
+        sizes = np.diff(np.concatenate((starts, [len(key)])))
+        multi = sizes >= 2
+        if not multi.any():
+            return
+        rows = order[np.repeat(multi, sizes)]
+        sizes = sizes[multi]
+        starts = np.concatenate(([0], np.cumsum(sizes)[:-1]))
 
-        def emit(ii: np.ndarray, jj: np.ndarray) -> None:
-            # pairwise signature agreement for explicit index pairs,
-            # chunked so the gathered (pairs × num_perm) temp is bounded
-            for cs in range(0, len(ii), 1 << 20):
-                ic = ii[cs : cs + (1 << 20)]
-                jc = jj[cs : cs + (1 << 20)]
-                mc = (sig_mat[ic] == sig_mat[jc]).sum(axis=1)
-                keep = mc >= min_matches
-                if keep.any():
-                    ia = ids[ic[keep]]
-                    ib = ids[jc[keep]]
-                    out_a.append(np.minimum(ia, ib))
-                    out_b.append(np.maximum(ia, ib))
+        def flat(name: str) -> np.ndarray:
+            values = pa.concat_arrays(tbl.column(name).chunks).flatten()
+            return values.to_numpy().reshape(n_rows, -1)[rows]
 
-        # small buckets, one vectorized pass per distinct bucket size
-        small = (sizes >= 2) & (sizes <= big_n)
+        ids = tbl.column("id").to_numpy()[rows]
+        band = tbl.column("band").to_numpy().astype(np.int64)[rows]
+        texts = tbl.column("t").take(pa.array(rows)).to_pylist()
+        sig_mat = flat("sig")
+        bh_mat = flat("bhs")
+        hset_memo: dict[str, np.ndarray] = {}
+        out: list[tuple[np.ndarray, ...]] = []
+
+        def hset(t) -> np.ndarray:
+            t = t or ""
+            hs = hset_memo.get(t)
+            if hs is None:
+                hs = hset_memo[t] = _shingle_hash_set(t, w)
+            return hs
+
+        def emit(ii: np.ndarray, jj: np.ndarray, estimated: bool) -> None:
+            for cs in range(0, len(ii), chunk):
+                ic, jc = ii[cs : cs + chunk], jj[cs : cs + chunk]
+                # lowest-band rule: argmax finds the first agreeing band
+                first = (bh_mat[ic] == bh_mat[jc]).argmax(axis=1)
+                k = first == band[ic]
+                ic, jc = ic[k], jc[k]
+                if not estimated:
+                    k = (sig_mat[ic] == sig_mat[jc]).sum(axis=1) >= min_matches
+                    ic, jc = ic[k], jc[k]
+                if not len(ic):
+                    continue
+                uniq, inv = np.unique(np.concatenate((ic, jc)), return_inverse=True)
+                hsets = [hset(texts[r]) for r in uniq]
+                ns = np.fromiter((h.size for h in hsets), np.int64, len(hsets))
+                ca, cb = inv[: len(ic)], inv[len(ic) :]
+                inter = _set_intersections(hsets, ca, cb)
+                uni = ns[ca] + ns[cb] - inter
+                k = inter * 1000 >= threshold_milli * uni
+                if k.any():
+                    ia, ib = ids[ic[k]], ids[jc[k]]
+                    out.append(
+                        (np.minimum(ia, ib), np.maximum(ia, ib), inter[k], uni[k])
+                    )
+
+        small = sizes <= big_n
         for n in np.unique(sizes[small]):
-            starts_n = seg_starts[small & (sizes == n)]
+            st = starts[small & (sizes == n)]
             ti, tj = np.triu_indices(int(n), 1)
             emit(
-                (starts_n[:, None] + ti[None, :]).ravel(),
-                (starts_n[:, None] + tj[None, :]).ravel(),
+                (st[:, None] + ti[None, :]).ravel(),
+                (st[:, None] + tj[None, :]).ravel(),
+                estimated=False,
             )
-        # big buckets: dense outer-product accumulation, row-chunked.
-        # Each signature column is first factorized WITHIN the bucket:
-        # a column with one distinct value (the band that DEFINES the
-        # bucket agrees on every member) contributes +1 to every pair
-        # and is folded into the threshold; a column with all-distinct
-        # values contributes 0 and is skipped; the rest compare as
-        # narrow integer codes instead of int64 — the dense pass is
-        # memory-bound, so code width is wall-clock (measured 15.3 s →
-        # ~2 s single-core on the sf1.0 hot buckets)
-        for s, n in zip(seg_starts[sizes > big_n], sizes[sizes > big_n]):
-            n = int(n)
+        for s, n in zip(starts[~small], sizes[~small]):
+            s, n = int(s), int(n)
             bsig = sig_mat[s : s + n]
             const_cols = 0
             var_cols: list[np.ndarray] = []
@@ -422,669 +495,36 @@ def _bucket_pairs_est(
                         acc += col[cs:ce, None] == col[None, :]
                     ii, jj = np.nonzero(acc >= thr)
                 keep = jj > (ii + cs)  # strict upper triangle only
-                if keep.any():
-                    ia = ids[s + ii[keep] + cs]
-                    ib = ids[s + jj[keep]]
-                    out_a.append(np.minimum(ia, ib))
-                    out_b.append(np.maximum(ia, ib))
-        if out_a:
-            yield pd.DataFrame(
-                {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
+                emit(s + cs + ii[keep], s + jj[keep], estimated=True)
+        if out:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(v)) for v in zip(*out)], schema.names
             )
 
-    out = banded.repartition(F.col("band"), F.col("bh")).mapInPandas(
-        gen, schema
-    )
-    # a pair sharing several bands is emitted once per collision;
-    # ``dedup=False`` lets a caller that already dedups downstream
-    # (e.g. the verifier's partition-local unique over id_a-partitioned
-    # pairs) skip this exchange
-    return out.distinct() if dedup else out
-
-
-def _sigs_banded_bm(
-    docs: DataFrame,
-    universe: np.ndarray,
-    num_perm: int,
-    w: int,
-    bands: int,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, sig, bm, band, bh) — signatures AND the exact shingle-set
-    bitmap over the corpus ``universe``, one Arrow pass per doc, then
-    the band explode.  The bitmap (V/8 bytes ≈ 260 B at the measured
-    V≈2k universe) rides the bucket shuffle so the bucket workers can
-    verify pairs EXACTLY in place — the per-pair text attach and its
-    ~600 B × 2 payload per candidate disappear (guide §2.3/§8: move
-    per-doc metadata once, never per-pair payloads).
-
-    Raises inside the worker if a text holds a shingle outside
-    ``universe`` — impossible when the universe was computed from the
-    same deterministic relation (loud failure beats silent wrong
-    counts)."""
-    a, b = _minhash_params(num_perm, seed)
-    a_u = a[:, None].astype(np.uint64)
-    b_u = b[:, None].astype(np.uint64)
-    base = np.uint64(1099511628211)
-    weights = np.empty(w, dtype=np.uint64)
-    weights[0] = 1
-    with np.errstate(over="ignore"):
-        for i in range(1, w):
-            weights[i] = weights[i - 1] * base
-    words = (universe.size + 63) >> 6
-
-    @F.pandas_udf(
-        T.StructType(
-            [
-                T.StructField("sig", T.ArrayType(T.LongType())),
-                T.StructField("bm", T.BinaryType()),
-            ]
-        )
-    )
-    def sig_bm(texts: pd.Series) -> pd.DataFrame:
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        sigs_out = []
-        bms_out = []
-        for t in texts:
-            raw = (t or "").encode("utf-8")
-            if len(raw) < w:
-                raw = raw + b"\x00" * (w - len(raw))
-            wins = sliding_window_view(np.frombuffer(raw, dtype=np.uint8), w)
-            hv = np.unique(
-                (wins.astype(np.uint64) * weights[None, :]).sum(
-                    axis=1, dtype=np.uint64
-                )
-            ) & np.uint64(0x7FFFFFFFFFFFFFFF)
-            mins = ((a_u * hv[None, :] + b_u) % np.uint64(_MERSENNE)).min(axis=1)
-            sigs_out.append(mins.astype(np.int64))
-            hs = _cached_hset(t or "", w)
-            idx = np.searchsorted(universe, hs)
-            idx_c = np.minimum(idx, universe.size - 1)
-            if not (universe[idx_c] == hs).all():
-                raise RuntimeError(
-                    "shingle outside the precomputed universe — the docs "
-                    "relation is not the one the universe was built from"
-                )
-            bm = np.zeros(words, dtype=np.uint64)
-            np.bitwise_or.at(
-                bm, idx_c >> 6, np.uint64(1) << (idx_c & 63).astype(np.uint64)
-            )
-            bms_out.append(bm.tobytes())
-        return pd.DataFrame({"sig": sigs_out, "bm": bms_out})
-
-    docs = _spread_for_udf(docs, "id")
-    sigs = docs.select(
-        F.col("id"), sig_bm(F.col("t")).alias("_sb")
-    ).select("id", F.col("_sb.sig").alias("sig"), F.col("_sb.bm").alias("bm"))
-    rows_per_band = num_perm // bands
-    # the bucket hash uses the FULL signature values; the signature that
-    # rides the shuffle for the estimate prefilter is truncated to
-    # 7-bit codes (array<tinyint>, 64 B vs 512 B at 64 perms — measured
-    # 5.7× collision→estimate reduction keeps the prefilter worth
-    # shipping, and the estimate gathers two code rows per collision
-    # pair, so code width is the stage's memory traffic).  Truncation
-    # collisions (~1/128 per position) can only ADD estimate matches,
-    # i.e. only let MORE pairs through to the exact popcount verify —
-    # the verified output is unchanged.
-    return sigs.select(
-        "id",
-        "sig",
-        "bm",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(
-                    F.slice("sig", i * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("band", "bh"),
-    ).select(
-        "id",
-        F.transform(
-            "sig", lambda x: x.bitwiseAND(F.lit(127)).cast("tinyint")
-        ).alias("sig"),
-        "bm",
-        "band",
-        "bh",
-    )
-
-
-def _bucket_pairs_verified(
-    banded_bm: DataFrame, num_perm: int, est_min: int, threshold_milli: int
-) -> DataFrame:
-    """LSH buckets → EXACT-verified near-dup pairs (id_a, id_b, inter,
-    uni), fused into the single bucket stage.
-
-    Extends :func:`_bucket_pairs_est`: the same in-worker bucket
-    grouping and signature-estimate prefilter, then — instead of
-    shipping ~10⁶-10⁷ estimate survivors to a separate text-attach +
-    verify stage — each surviving pair's exact |A∩B| is one
-    popcount(AND) over the docs' shingle bitmaps, right where the pair
-    is born.  Only TRUE near-dup pairs (×bands duplicates) ever leave
-    the worker (measured 8.5M estimate survivors → 80 verified on the
-    sf1.0 bench corpus), so the pair repartition, the two text joins
-    and the 5 GB/query Arrow text transfer vanish (guide §2.4 "remove
-    shuffles outright", §8 "decide with small rows").  Output-identical
-    to the est → attach → verify chain: the bitmap encodes exactly the
-    hash-set membership the verifier probed."""
-    min_matches = -(-est_min // 1000)
-    acc_t = np.uint8 if num_perm <= 255 else np.uint16
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("inter", T.LongType()),
-            T.StructField("uni", T.LongType()),
-        ]
-    )
-    big_n = 64
-    lut = _POPCOUNT16
-
-    def gen(it):
-        frames = list(it)
-        if not frames:
-            return
-        df = pd.concat(frames, ignore_index=True)
-        if df.empty:
-            return
-        key = df["band"].to_numpy(np.int64) * np.int64(1 << 33) + (
-            df["bh"].to_numpy(np.int64) + np.int64(1 << 32)
-        )
-        order = np.argsort(key, kind="stable")
-        key = key[order]
-        ids = df["id"].to_numpy(np.int64)[order]
-        sig_mat = np.vstack(df["sig"].to_numpy()[order])  # int8 codes
-        bm_mat = np.vstack(
-            [
-                np.frombuffer(buf, dtype=np.uint64)
-                for buf in df["bm"].to_numpy()[order]
-            ]
-        )
-        nsh = lut[bm_mat.view(np.uint16)].sum(axis=1, dtype=np.int64)
-        bounds = np.nonzero(np.diff(key))[0] + 1
-        seg_starts = np.concatenate(([0], bounds))
-        sizes = np.diff(np.concatenate((seg_starts, [len(key)])))
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        out_i: list[np.ndarray] = []
-        out_u: list[np.ndarray] = []
-
-        def emit(ii: np.ndarray, jj: np.ndarray) -> None:
-            # estimate prefilter, then exact popcount verify, chunked
-            for cs in range(0, len(ii), 1 << 20):
-                ic = ii[cs : cs + (1 << 20)]
-                jc = jj[cs : cs + (1 << 20)]
-                mc = (sig_mat[ic] == sig_mat[jc]).sum(axis=1)
-                est = mc >= min_matches
-                if not est.any():
-                    continue
-                ie, je = ic[est], jc[est]
-                inter = lut[(bm_mat[ie] & bm_mat[je]).view(np.uint16)].sum(
-                    axis=1, dtype=np.int64
-                )
-                uni = nsh[ie] + nsh[je] - inter
-                keep = inter * 1000 >= threshold_milli * uni
-                if keep.any():
-                    ia = ids[ie[keep]]
-                    ib = ids[je[keep]]
-                    out_a.append(np.minimum(ia, ib))
-                    out_b.append(np.maximum(ia, ib))
-                    out_i.append(inter[keep])
-                    out_u.append(uni[keep])
-
-        small = (sizes >= 2) & (sizes <= big_n)
-        for n in np.unique(sizes[small]):
-            starts_n = seg_starts[small & (sizes == n)]
-            ti, tj = np.triu_indices(int(n), 1)
-            emit(
-                (starts_n[:, None] + ti[None, :]).ravel(),
-                (starts_n[:, None] + tj[None, :]).ravel(),
-            )
-        # big buckets: estimate via factorized-code accumulation as in
-        # _bucket_pairs_est, exact popcount only on the survivors
-        for s, n in zip(seg_starts[sizes > big_n], sizes[sizes > big_n]):
-            n = int(n)
-            bsig = sig_mat[s : s + n]
-            const_cols = 0
-            var_cols: list[np.ndarray] = []
-            for p in range(bsig.shape[1]):
-                u, inv = np.unique(bsig[:, p], return_inverse=True)
-                if len(u) == 1:
-                    const_cols += 1
-                elif len(u) < n:
-                    ct = np.uint8 if len(u) <= 255 else (
-                        np.uint16 if len(u) <= 65535 else np.int64
-                    )
-                    var_cols.append(inv.astype(ct))
-            thr = min_matches - const_cols
-            for cs in range(0, n, 2048):
-                ce = min(cs + 2048, n)
-                if thr <= 0:
-                    ii, jj = np.nonzero(np.ones((ce - cs, n), dtype=bool))
-                else:
-                    acc = np.zeros((ce - cs, n), dtype=acc_t)
-                    for col in var_cols:
-                        acc += col[cs:ce, None] == col[None, :]
-                    ii, jj = np.nonzero(acc >= thr)
-                keep = jj > (ii + cs)  # strict upper triangle only
-                if not keep.any():
-                    continue
-                ie = s + ii[keep] + cs
-                je = s + jj[keep]
-                inter = lut[(bm_mat[ie] & bm_mat[je]).view(np.uint16)].sum(
-                    axis=1, dtype=np.int64
-                )
-                uni = nsh[ie] + nsh[je] - inter
-                kx = inter * 1000 >= threshold_milli * uni
-                if kx.any():
-                    ia = ids[ie[kx]]
-                    ib = ids[je[kx]]
-                    out_a.append(np.minimum(ia, ib))
-                    out_b.append(np.maximum(ia, ib))
-                    out_i.append(inter[kx])
-                    out_u.append(uni[kx])
-        if out_a:
-            yield pd.DataFrame(
-                {
-                    "id_a": np.concatenate(out_a),
-                    "id_b": np.concatenate(out_b),
-                    "inter": np.concatenate(out_i),
-                    "uni": np.concatenate(out_u),
-                }
-            )
-
-    out = banded_bm.repartition(F.col("band"), F.col("bh")).mapInPandas(
-        gen, schema
-    )
-    # a pair sharing several bands is verified once per collision with
-    # identical (inter, uni) — a plain distinct de-duplicates the tiny
-    # survivor stream
-    return out.distinct()
-
-
-def _shingle_hash_set(t: str, w: int) -> np.ndarray:
-    """Sorted distinct 64-bit polynomial hashes of the character
-    ``w``-shingles of ``t`` (the whole string when shorter than ``w`` —
-    same membership rule as the set-based verifier it replaced).
-
-    Characters are the UTF-32 code points, so windows match Python
-    string slicing exactly; hashing is the module's rolling polynomial
-    (prefix products + inverse-power prefix sums, `_mix64` avalanche) —
-    one numpy pass per text, no per-shingle Python."""
-    t = t or ""
-    cps = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    n = len(cps)
-    if n == 0:
-        return _mix64(np.zeros(1, dtype=np.uint64))
-    if n < w:
-        starts = np.array([0], dtype=np.int64)
-        ends = np.array([n], dtype=np.int64)
-    else:
-        starts = np.arange(0, n - w + 1, dtype=np.int64)
-        ends = starts + w
-    with np.errstate(over="ignore"):
-        pw = np.concatenate(
-            ([np.uint64(1)], np.cumprod(np.full(n - 1, _POLY_BASE, dtype=np.uint64)))
-        )
-        ivp = np.concatenate(
-            ([np.uint64(1)], np.cumprod(np.full(n - 1, _POLY_INV, dtype=np.uint64)))
-        )
-        s = np.concatenate(([np.uint64(0)], np.cumsum(cps * ivp)))
-        return np.unique(_mix64(pw[ends - 1] * (s[ends] - s[starts])))
-
-
-# Worker-level shingle-hash-set memo for the pair verifier: the same
-# text recurs across MANY candidate pairs and Arrow batches (a doc with
-# k candidates appears k times), and re-hashing it per batch dominated
-# the verify stage.  Keyed by the text itself (content-addressed, so
-# reuse across queries/corpora is always correct); bounded and cleared
-# wholesale rather than LRU-tracked — the working set per task is one
-# corpus partition's texts, far below the cap (guide §4.5: heavyweight
-# init once per worker, amortized across batches via worker reuse).
-_HSET_CACHE: dict[tuple[str, int], np.ndarray] = {}
-_HSET_CACHE_CAP = 200_000
-
-
-def _cached_hset(t: str, w: int) -> np.ndarray:
-    key = (t, w)
-    hs = _HSET_CACHE.get(key)
-    if hs is None:
-        if len(_HSET_CACHE) >= _HSET_CACHE_CAP:
-            _HSET_CACHE.clear()
-        hs = _shingle_hash_set(t, w)
-        _HSET_CACHE[key] = hs
-    return hs
-
-
-def _pair_jaccard_udf(w: int):
-    """Arrow-batched exact shingle-Jaccard for candidate *pairs* — only
-    over LSH candidates (a vanishing fraction of all pairs), never the
-    full corpus.  Each distinct text is shingle-hashed ONCE per worker
-    (`_cached_hset`); pairs are then grouped by their left text and
-    verified with ONE ``searchsorted`` + ``add.reduceat`` per group
-    (probe all the group's right-hand sets into the shared left set in
-    a single vectorized call) — no per-pair numpy calls, no per-pair
-    Python set arithmetic."""
-
-    @F.pandas_udf(
-        T.StructType(
-            [
-                T.StructField("inter", T.LongType()),
-                T.StructField("uni", T.LongType()),
-            ]
-        )
-    )
-    def jac(ta: pd.Series, tb: pd.Series) -> pd.DataFrame:
-        texts = pd.concat([ta, tb], ignore_index=True).fillna("")
-        codes, uniq = pd.factorize(texts)
-        hsets = [_cached_hset(t, w) for t in uniq]
-        sizes = np.fromiter((h.size for h in hsets), np.int64, len(hsets))
-        m = len(ta)
-        ia, ib = codes[:m], codes[m:]
-        inters = np.empty(m, dtype=np.int64)
-        order = np.argsort(ia, kind="stable")
-        oa, ob = ia[order], ib[order]
-        pos = 0
-        while pos < m:
-            end = pos
-            a = oa[pos]
-            while end < m and oa[end] == a:
-                end += 1
-            ha = hsets[a]
-            grp = ob[pos:end]
-            seg = [hsets[c] for c in grp]
-            lens = np.fromiter((s.size for s in seg), np.int64, len(seg))
-            probe = np.concatenate(seg) if len(seg) > 1 else seg[0]
-            idx = np.searchsorted(ha, probe)
-            idx[idx == ha.size] = 0  # any in-range slot; equality decides
-            eq = (ha[idx] == probe).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(lens[:-1])))
-            inters[order[pos:end]] = np.add.reduceat(eq, starts)
-            pos = end
-        unis = sizes[ia] + sizes[ib] - inters
-        return pd.DataFrame({"inter": inters, "uni": unis})
-
-    return jac
-
-
-# Shared-universe bitmap verify (see _verify_pairs_stage): boilerplate
-# corpora draw their shingles from a tiny shared universe (measured
-# ~2,000 distinct shingle hashes across 50k bench docs), so each doc
-# compresses to V/64 uint64 words and a pair's exact intersection is
-# popcount(A & B) — ~30 word-ops instead of gathering + binary-searching
-# ~325 hash probes per pair.  The universe is discovered ONCE per query
-# by a bounded aggregate (below); per-text bitmaps are then pure
-# functions of (text, universe) and live in the worker's
-# content-addressed cache, so a text is encoded once per worker, not
-# once per partition × repetition (guide §4.5).
-_BITMAP_UNIVERSE_CAP = 8192
-_POPCOUNT16 = np.unpackbits(
-    np.arange(1 << 16, dtype=np.uint16).view(np.uint8)[:, None], axis=1
-).sum(axis=1, dtype=np.uint8).reshape(-1, 2).sum(axis=1, dtype=np.uint8)
-
-_BITMAP_CACHE: dict[tuple, np.ndarray] = {}
-_BITMAP_CACHE_CAP = 200_000
-
-
-def _shingle_universe(docs: DataFrame, w: int) -> np.ndarray | None:
-    """The corpus's distinct shingle-hash universe, or None when it is
-    wider than `_BITMAP_UNIVERSE_CAP` (the driver action is bounded by
-    the cap — a diverse 10^12-doc corpus short-circuits to None after
-    cap+1 rows, it never materializes its shingle space)."""
-    schema = T.StructType([T.StructField("h", T.LongType())])
-
-    def local_unique(it):
-        # int64 bit-view: LongType-safe transport of the uint64 hash
-        # domain (values above 2^63 ride as negatives).  One np.unique
-        # per partition — no per-element python; a partition whose own
-        # distinct count exceeds the cap truncates to cap+1 rows, which
-        # still drives the global count over the cap → None.
-        chunks: list[np.ndarray] = []
-        for df in it:
-            chunks.extend(
-                _cached_hset(t or "", w).view(np.int64) for t in df["t"]
-            )
-        if chunks:
-            u = np.unique(np.concatenate(chunks))
-            yield pd.DataFrame({"h": u[: _BITMAP_UNIVERSE_CAP + 1]})
-
-    rows = (
-        _spread_for_udf(docs.select("id", "t"), "id")
-        .select("t")
-        .mapInPandas(local_unique, schema)
-        .distinct()
-        .limit(_BITMAP_UNIVERSE_CAP + 1)
-        .collect()
-    )
-    if len(rows) > _BITMAP_UNIVERSE_CAP:
-        return None
-    signed = np.array([r["h"] for r in rows], dtype=np.int64)
-    return np.sort(signed.view(np.uint64))
-
-
-def _cached_bitmap(
-    t: str, w: int, universe: np.ndarray, utoken: int
-) -> np.ndarray | None:
-    """(text → universe bitmap), worker-memoized; None if the text has
-    a shingle outside the universe (caller falls back to hash sets)."""
-    key = (t, w, utoken)
-    bm = _BITMAP_CACHE.get(key)
-    if bm is None:
-        hs = _cached_hset(t, w)
-        idx = np.searchsorted(universe, hs)
-        idx_c = np.minimum(idx, universe.size - 1)
-        if not (universe[idx_c] == hs).all():
-            return None
-        words = (universe.size + 63) >> 6
-        bm = np.zeros(words, dtype=np.uint64)
-        np.bitwise_or.at(bm, idx_c >> 6, np.uint64(1) << (idx_c & 63).astype(np.uint64))
-        if len(_BITMAP_CACHE) >= _BITMAP_CACHE_CAP:
-            _BITMAP_CACHE.clear()
-        _BITMAP_CACHE[key] = bm
-    return bm
-
-
-def _verify_pairs_stage(
-    paired: DataFrame,
-    w: int,
-    threshold_milli: int,
-    universe: np.ndarray | None = None,
-) -> DataFrame:
-    """Candidate (id_a, id_b, ta, tb) rows → verified near-dup pairs
-    (id_a, id_b, inter, uni) with exact shingle-Jaccard ≥ threshold —
-    duplicate candidates (one per shared band) removed, verified, and
-    filtered in ONE partition-level pass.
-
-    The input must be partitioned so both copies of a pair co-locate
-    (any partitioning on id_a does: duplicates agree on both ids).
-    Per partition: unique (id_a, id_b) rows; distinct texts hashed once
-    (worker-memoized, `_cached_hset`); the per-pair probes are gathered
-    from one flat concatenation with a vectorized repeat/cumsum index —
-    no per-pair numpy calls — and each id_a run costs a single
-    ``searchsorted`` + ``add.reduceat``.  Only passing pairs are ever
-    yielded, so the downstream plan sees the ~0.03% survivors, not the
-    candidate stream."""
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("inter", T.LongType()),
-            T.StructField("uni", T.LongType()),
-        ]
-    )
-
-    def gen(it):
-        frames = list(it)
-        if not frames:
-            return
-        df = pd.concat(frames, ignore_index=True)
-        if df.empty:
-            return
-        ia_raw = df["id_a"].to_numpy(np.int64)
-        ib_raw = df["id_b"].to_numpy(np.int64)
-        # partition-local distinct on the pair key (order-insensitive:
-        # lexsort + adjacent-difference, no reliance on input order)
-        perm = np.lexsort((ib_raw, ia_raw))
-        ia_s, ib_s = ia_raw[perm], ib_raw[perm]
-        first = np.ones(len(ia_s), dtype=bool)
-        first[1:] = (np.diff(ia_s) != 0) | (np.diff(ib_s) != 0)
-        sel = perm[first]
-        sel.sort()  # keep text/pair rows aligned with the original frame
-        ia, ib = ia_raw[sel], ib_raw[sel]
-        texts = pd.concat(
-            [df["ta"].iloc[sel], df["tb"].iloc[sel]], ignore_index=True
-        ).fillna("")
-        codes, uniq = pd.factorize(texts)
-        m = len(ia)
-        ca, cb = codes[:m], codes[m:]
-        if universe is not None:
-            utoken = int(universe[0] ^ universe[-1] ^ np.uint64(universe.size))
-            bitmaps = [_cached_bitmap(t, w, universe, utoken) for t in uniq]
-            if all(b is not None for b in bitmaps):
-                mat = np.vstack(bitmaps)
-                lut = _POPCOUNT16
-                sizes = lut[mat.view(np.uint16)].sum(axis=1, dtype=np.int64)
-                inters = np.empty(m, dtype=np.int64)
-                chunk = max(1, (1 << 22) // max(mat.shape[1], 1))
-                for cs in range(0, m, chunk):
-                    ce = min(cs + chunk, m)
-                    andw = mat[ca[cs:ce]] & mat[cb[cs:ce]]
-                    inters[cs:ce] = lut[andw.view(np.uint16)].sum(
-                        axis=1, dtype=np.int64
-                    )
-                unis = sizes[ca] + sizes[cb] - inters
-                keep = inters * 1000 >= threshold_milli * unis
-                if keep.any():
-                    yield pd.DataFrame(
-                        {
-                            "id_a": ia[keep],
-                            "id_b": ib[keep],
-                            "inter": inters[keep],
-                            "uni": unis[keep],
-                        }
-                    )
-                return
-        hsets = [_cached_hset(t, w) for t in uniq]
-        sizes = np.fromiter((h.size for h in hsets), np.int64, len(hsets))
-        # sort pairs by left code so each id_a group is a contiguous
-        # run, then gather every pair's right-hand set from ONE flat
-        # concatenation of the distinct hsets with a single vectorized
-        # repeat+arange index — no per-pair numpy calls anywhere
-        run = np.argsort(ca, kind="stable")
-        ca_s, cb_s = ca[run], cb[run]
-        flat = np.concatenate(hsets) if len(hsets) > 1 else hsets[0]
-        offs = np.concatenate(([0], np.cumsum(sizes[:-1])))
-        lens_b = sizes[cb_s]
-        starts_b = offs[cb_s]
-        total = int(lens_b.sum())
-        bound = np.concatenate(([0], np.cumsum(lens_b)))
-        gather = np.repeat(starts_b - bound[:-1], lens_b) + np.arange(total)
-        probe = flat[gather]
-        run_bounds = np.nonzero(np.diff(ca_s))[0] + 1
-        grp_starts = np.concatenate(([0], run_bounds))
-        grp_ends = np.concatenate((run_bounds, [m]))
-        inters_s = np.empty(m, dtype=np.int64)
-        for gs, ge in zip(grp_starts, grp_ends):
-            ha = hsets[ca_s[gs]]
-            seg = probe[bound[gs] : bound[ge]]
-            loc = np.searchsorted(ha, seg)
-            loc[loc == ha.size] = 0  # any in-range slot; equality decides
-            eq = (ha[loc] == seg).astype(np.int64)
-            inters_s[gs:ge] = np.add.reduceat(eq, bound[gs:ge] - bound[gs])
-        inters = np.empty(m, dtype=np.int64)
-        inters[run] = inters_s
-        unis = sizes[ca] + sizes[cb] - inters
-        keep = inters * 1000 >= threshold_milli * unis
-        if keep.any():
-            yield pd.DataFrame(
-                {
-                    "id_a": ia[keep],
-                    "id_b": ib[keep],
-                    "inter": inters[keep],
-                    "uni": unis[keep],
-                }
-            )
-
-    return paired.mapInPandas(gen, schema)
-
-
-def _shingle_size_udf(w: int):
-    """|distinct w-shingle set| per text — the (inter, uni) both equal
-    this for an exact-duplicate pair, letting the expansion step emit
-    within-group pairs without running the pair verifier on them."""
-
-    @F.pandas_udf(T.LongType())
-    def ssize(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [int(_shingle_hash_set(t, w).size) for t in texts.fillna("")]
-        )
-
-    return ssize
+    return banded.repartition(F.col("band"), F.col("bh")).mapInArrow(gen, schema)
 
 
 def _minhash_pairs_core(
-    docs: DataFrame,
-    num_perm: int,
-    bands: int,
-    threshold_milli: int,
-    w: int,
-    bucket_cap: int | None,
-    universe: np.ndarray | None = None,
-    universe_known: bool = False,
+    docs: DataFrame, num_perm: int, bands: int, threshold_milli: int, w: int
 ) -> DataFrame:
-    """signatures → fused LSH-bucket + estimate pair generation → exact
-    per-pair Jaccard verify, over ``docs(id, t)``.  Candidates only —
-    never the all-pairs inverted index.
+    """``docs(id, t)`` → exact-verified near-dup pairs (id_a, id_b,
+    inter, uni) with character-shingle Jaccard ≥ threshold_milli/1000
+    among the LSH candidates — never the all-pairs inverted index.
 
-    The signature-level Jaccard estimate (count of agreeing signature
-    positions, threshold ``threshold_milli - 150``: the margin keeps
-    the estimate's false-negative probability < 1% at 64 perms) is
-    applied INSIDE the bucket stage (:func:`_bucket_pairs_est`), so raw
-    bucket collisions are never shuffled, deduplicated, or re-joined
-    against the signature table — only estimate survivors reach the
-    pair-level distinct and the exact verifier.  The estimate is a pure
-    pair function, so the output is identical to the historical
-    candidates → distinct → estimate-join plan (and still gated by the
-    all-pairs oracle)."""
-    est_min = max(0, threshold_milli - 150) * num_perm
-    # boilerplate-corpus fast path: when the corpus's distinct shingle
-    # universe is small (bounded discovery job — None above the cap),
-    # each doc's exact shingle set compresses to a V-bit bitmap that
-    # rides the bucket shuffle, and pairs are estimate-filtered AND
-    # exact-verified inside the bucket workers — only true near-dup
-    # pairs ever leave the stage (guide §2.4/§8).  Wide-universe
-    # corpora keep the est → text-attach → verify chain.
-    if not universe_known:
-        universe = _shingle_universe(docs, w)
-    if universe is not None and bucket_cap is None:
-        banded_bm = _sigs_banded_bm(docs, universe, num_perm, w, bands)
-        return _bucket_pairs_verified(
-            banded_bm, num_perm, est_min, threshold_milli
-        )
-    sigs = minhash_signatures(docs, "t", "id", num_perm, w)
-    banded = _banded_sigs(sigs, bands, num_perm // bands)
-    if bucket_cap is not None:
-        banded = _cap_buckets(banded, ["band", "bh"], bucket_cap)
-    # one exchange between candidates and output: pairs co-partition on
-    # id_a (both copies of a band-duplicated pair agree on both ids, so
-    # any id_a partitioning co-locates them), texts attach by broadcast
-    # join, and the verify stage dedups + verifies + filters in a
-    # single partition-level pass — the pair-level distinct exchange
-    # and the post-UDF filter both collapse into it (guide §2.4)
-    cand = _bucket_pairs_est(banded, num_perm, est_min, dedup=False)
-    cand = cand.repartition(F.col("id_a"))
-    # (A broadcast-{id: text} variant that streamed only 16-byte id
-    # pairs was measured SLOWER here: each task re-unpickles the
-    # broadcast dict and every partition re-derives ~all right-hand
-    # hash sets, costing more than the per-pair text transfer saves.
-    # The broadcast joins below attach texts without moving the
-    # candidate stream.)
-    paired = (
-        cand.join(docs.select(F.col("id").alias("id_a"), F.col("t").alias("ta")), "id_a")
-        .join(docs.select(F.col("id").alias("id_b"), F.col("t").alias("tb")), "id_b")
+    One Arrow signature pass, then the band explode carries each doc's
+    text, signature and band-hash array to its ``bands`` buckets, and
+    :func:`_bucket_pairs` estimates, verifies and emits every pair where
+    it is born: one exchange, no text re-joins, no pair-level distinct.
+    The output is exactly {LSH candidate pairs whose signatures agree in
+    ≥ ceil((threshold_milli - 150) · num_perm / 1000) positions and whose
+    exact Jaccard ≥ threshold}, whatever the corpus vocabulary."""
+    sig = _signature_udf(num_perm, w)
+    banded = (
+        docs.select("id", "t", sig(F.col("t")).alias("sig"))
+        .select("id", "t", "sig", _band_hashes("sig", bands, num_perm // bands).alias("bhs"))
+        .select("id", "t", "sig", "bhs", F.posexplode("bhs").alias("band", "bh"))
     )
-    return _verify_pairs_stage(paired, w, threshold_milli, universe)
+    return _bucket_pairs(banded, num_perm, threshold_milli, w)
 
 
 def minhash_dedup(
@@ -1097,25 +537,26 @@ def minhash_dedup(
     w: int = 5,
     collapse_exact: bool = True,
     expand: str = "all",
-    bucket_cap: int | None = None,
 ) -> DataFrame:
-    """Full pipeline: **exact-text pre-collapse** → signatures → LSH
-    candidates → exact-Jaccard verify within candidates → fan results
-    back out through the exact-duplicate groups.  Returns
+    """Full pipeline: **exact-text pre-collapse** → signatures → one
+    bucket stage that generates, estimates and exact-verifies LSH
+    candidate pairs (:func:`_minhash_pairs_core`) → fan results back
+    out through the exact-duplicate groups.  Returns
     (id_a, id_b, inter, uni) verified near-dup pairs; survivors follow
     the min-id rule downstream.
 
     The pre-collapse (``collapse_exact``, on by default) is the
     hot-bucket defense the 10^12-doc case REQUIRES: n byte-identical
     boilerplate docs have identical signatures, so they land in the
-    same (band, hash) bucket in *every* band and the candidate
-    self-join emits ~bands·n²/2 pairs.  Grouping by exact content hash
-    first (sha2-256, the same key as :func:`exact_dedup`) runs the
-    whole LSH machinery on one representative per distinct text —
-    identical docs can never inflate a bucket, signatures are computed
-    once per distinct text, and the result is provably identical: the
-    signature/estimate/verify stack is a pure function of the text, so
-    a member pair passes iff its representative pair passes.
+    same (band, hash) bucket in *every* band and the bucket stage would
+    see ~n²/2 pairs.  One map-side-combinable aggregate on the sha2-256
+    content key (the same key as :func:`exact_dedup`) picks the min-id
+    representative of each distinct text and counts its group, and the
+    LSH machinery runs on the representatives only — identical docs can
+    never inflate a bucket, and the result is identical to the
+    un-collapsed pipeline: the pair stack is a pure function of the
+    text, so a member pair passes iff its representative pair passes.
+    Only multi-member groups are joined back to their member ids.
 
     ``expand`` controls the fan-out:
       * ``"all"`` — every implied member pair, with (inter, uni) taken
@@ -1127,95 +568,65 @@ def minhash_dedup(
         spanning pairs, and cross-group pairs only between
         representatives: O(n) output with identical connected
         components / dup_groups downstream — the form to use at scale.
-
-    ``bucket_cap`` additionally drops residual oversized LSH buckets
-    (near-identical template *families*); see :func:`_cap_buckets`.
     """
     if expand not in ("all", "star"):
         raise ValueError(f"unknown expand mode {expand!r}")
-    if not collapse_exact:
-        docs = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-        return _minhash_pairs_core(
-            docs, num_perm, bands, threshold_milli, w, bucket_cap
-        )
     docs = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-    # the shingle universe of the RAW corpus equals the universe of its
-    # distinct-text representatives (duplicate texts add no shingles) —
-    # discover it BEFORE the collapse machinery so the bounded discovery
-    # job scans the plain corpus instead of materializing the
-    # sha2/groupBy/semi-join chain a first time
-    universe = _shingle_universe(docs, w) if bucket_cap is None else None
-    # hash the corpus ONCE: keyed is the tiny (id, 32-byte digest)
-    # projection, persisted so reps and mapping both read it instead of
-    # re-running sha2 over the full text column
-    keyed = docs.select(
-        "id", F.sha2(F.coalesce(F.col("t"), F.lit("")), 256).alias("_h")
-    ).persist()
-    # map-side combinable min per content hash; the mapping join fans a
-    # hot content hash 1×n, never n×n
-    reps = keyed.groupBy("_h").agg(F.min("id").alias("rep_id"))
-    mapping = keyed.join(reps, "_h").select("id", "rep_id").persist()
-    rep_docs = docs.join(
-        reps.select(F.col("rep_id").alias("id")), "id", "semi"
+    if not collapse_exact:
+        return _minhash_pairs_core(
+            _spread_for_udf(docs, "id"), num_perm, bands, threshold_milli, w
+        )
+    content = F.sha2(F.coalesce(F.col("t"), F.lit("")), 256).alias("_h")
+    groups = docs.groupBy(content).agg(
+        F.min("id").alias("rep_id"),
+        F.min_by("t", "id").alias("t"),
+        F.count(F.lit(1)).alias("_gn"),
     )
     rep_pairs = _minhash_pairs_core(
-        rep_docs, num_perm, bands, threshold_milli, w, bucket_cap,
-        universe=universe, universe_known=bucket_cap is None,
+        groups.select(F.col("rep_id").alias("id"), "t"),
+        num_perm, bands, threshold_milli, w,
     )
-    # exact groups with >1 member need |shingle set| for their
-    # within-group pairs — computed once per such representative
-    multi = mapping.groupBy("rep_id").agg(
-        F.count(F.lit(1)).alias("_gn")
-    ).filter(F.col("_gn") > 1)
-    ssize = _shingle_size_udf(w)
-    sizes = (
-        rep_docs.join(
-            multi.select(F.col("rep_id").alias("id")), "id", "semi"
-        )
-        .select(F.col("id").alias("rep_id"), ssize(F.col("t")).alias("_ss"))
+    # members of multi-member groups only, each with its group's
+    # |shingle set| (the inter = uni of every within-group pair)
+    multi = groups.filter(F.col("_gn") > 1).select(
+        "_h",
+        "rep_id",
+        F.size(shingles(F.coalesce(F.col("t"), F.lit("")), w)).cast("long").alias("_ss"),
     )
+    members = docs.select(F.col("id").alias("_x"), content).join(multi, "_h")
     if expand == "star":
-        within = (
-            mapping.filter(F.col("id") != F.col("rep_id"))
-            .join(sizes, "rep_id")
-            .select(
-                F.col("rep_id").alias("id_a"),
-                F.col("id").alias("id_b"),
-                F.col("_ss").alias("inter"),
-                F.col("_ss").alias("uni"),
-            )
-        )
-        return rep_pairs.unionByName(within)
-    ma = mapping.select(F.col("id").alias("_xa"), F.col("rep_id").alias("id_a"))
-    mb = mapping.select(F.col("id").alias("_xb"), F.col("rep_id").alias("id_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_xa", "_xb").alias("id_a"),
-            F.greatest("_xa", "_xb").alias("id_b"),
-            "inter",
-            "uni",
-        )
-    )
-    # restrict the mapping to multi-member groups FIRST (the sizes
-    # dimension is exactly those groups): the within self-join then
-    # pairs only duplicate families instead of self-pairing every
-    # singleton of the corpus and filtering afterwards
-    m_multi = mapping.join(sizes, "rep_id")
-    w1 = m_multi.select("rep_id", "_ss", F.col("id").alias("_xa"))
-    w2 = m_multi.select("rep_id", F.col("id").alias("_xb"))
-    within = (
-        w1.join(w2, "rep_id")
-        .filter(F.col("_xa") < F.col("_xb"))
-        .select(
-            F.col("_xa").alias("id_a"),
-            F.col("_xb").alias("id_b"),
+        within = members.filter(F.col("_x") != F.col("rep_id")).select(
+            F.col("rep_id").alias("id_a"),
+            F.col("_x").alias("id_b"),
             F.col("_ss").alias("inter"),
             F.col("_ss").alias("uni"),
         )
+        return rep_pairs.unionByName(within)
+    # a multi-member group's within pairs are the fan-out of its
+    # (rep, rep) self pair, so ONE pair of member joins (both sides the
+    # same exchange) expands the cross and within pairs together
+    self_pairs = multi.select(
+        F.col("rep_id").alias("id_a"),
+        F.col("rep_id").alias("id_b"),
+        F.col("_ss").alias("inter"),
+        F.col("_ss").alias("uni"),
     )
-    return cross.unionByName(within)
+    m = members.select("rep_id", "_x")
+    xa = F.coalesce("ma._x", "p.id_a")
+    xb = F.coalesce("mb._x", "p.id_b")
+    return (
+        rep_pairs.unionByName(self_pairs)
+        .alias("p")
+        .join(m.alias("ma"), F.col("p.id_a") == F.col("ma.rep_id"), "left")
+        .join(m.alias("mb"), F.col("p.id_b") == F.col("mb.rep_id"), "left")
+        .filter((F.col("p.id_a") != F.col("p.id_b")) | (xa < xb))
+        .select(
+            F.least(xa, xb).alias("id_a"),
+            F.greatest(xa, xb).alias("id_b"),
+            "p.inter",
+            "p.uni",
+        )
+    )
 
 
 # ---------------------------------------------------------------------------

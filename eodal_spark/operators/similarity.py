@@ -23,25 +23,6 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 
-def _dec(c: Column) -> Column:
-    return c.cast("decimal(12,9)")
-
-
-def l2_sqdist_decimal(a: Column, b: Column) -> Column:
-    """Exact decimal squared L2 distance between two float arrays.
-
-    Types are pinned so every step is exact (no 38-precision cap hits):
-    elements → decimal(12,9) (|x| < 1000), diff → decimal(13,9) (|x-y|
-    can reach 2000 — a (12,9) re-cast would overflow under ANSI), diff²
-    → decimal(27,18) exact, accumulator decimal(32,18)."""
-    diff = F.zip_with(a, b, lambda x, y: (_dec(x) - _dec(y)).cast("decimal(13,9)"))
-    return F.aggregate(
-        diff,
-        F.lit(0).cast("decimal(32,18)"),
-        lambda acc, d: (acc + (d * d)).cast("decimal(32,18)"),
-    )
-
-
 Q7 = 10_000_000.0  # quantization scale for the integer-exact metric
 
 

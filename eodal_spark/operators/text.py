@@ -24,11 +24,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def _count_word(text: Column, word: str) -> Column:
-    """Occurrences of a whole word (case-insensitive) — native regexp."""
-    return F.regexp_count(F.lower(text), F.lit(rf"\b{word}\b"))
-
-
 def _count_words(text: Column, words: list[str]) -> Column:
     """Total occurrences of a set of whole words in ONE regexp pass.
 
@@ -212,18 +207,6 @@ def bullet_ellipsis_frac_milli(text: Column) -> Column:
     )
     return F.when(n <= 0, F.lit(0).cast("long")).otherwise(
         _idiv(hits * 1000, n)
-    )
-
-
-def repetition_flags(text: Column) -> Column:
-    """Gopher-style keep/drop verdict from the repetition signals
-    (public thresholds: dup-line ≥ 30%, dup-line-chars ≥ 20%,
-    top-2-gram chars ≥ 20%, bullet/ellipsis lines ≥ 90% → drop)."""
-    return (
-        (dup_line_frac_milli(text) < 300)
-        & (dup_line_char_frac_milli(text) < 200)
-        & (top2gram_char_frac_milli(text) < 200)
-        & (bullet_ellipsis_frac_milli(text) < 900)
     )
 
 

@@ -77,12 +77,3 @@ def append_stage_metrics(df: DataFrame, stage: str, metrics_dir: str) -> dict:
     with open(os.path.join(metrics_dir, "lineage.jsonl"), "a") as f:
         f.write(json.dumps(record) + "\n")
     return record
-
-
-def explain_str(df: DataFrame) -> str:
-    """The formatted physical plan as a string (for plan assertions)."""
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )

@@ -81,6 +81,36 @@ def test_minhash_signature_determinism(planted):
         assert a["id"] == b["id"] and a["sig"] == b["sig"]
 
 
+def test_minhash_signatures_match_python_reference(spark, planted):
+    """Signature values equal a plain-Python loop over the same
+    definition: UTF-8 byte w-shingles (NUL-padded to w), polynomial
+    hash Σ byte[i+j]·base^j mod 2^64 with its top bit cleared, and per
+    permutation min((a·h + b) mod 2^64 mod (2^61 - 1))."""
+    m64 = (1 << 64) - 1
+    base = 1099511628211
+    a, b = D._minhash_params(64, 42)
+
+    def ref(t):
+        raw = (t or "").encode("utf-8")
+        raw += b"\x00" * max(0, 5 - len(raw))
+        hv = {
+            sum(raw[i + j] * pow(base, j, 1 << 64) for j in range(5)) & m64
+            & 0x7FFFFFFFFFFFFFFF
+            for i in range(len(raw) - 4)
+        }
+        return [
+            min(((int(ak) * h + int(bk)) & m64) % ((1 << 61) - 1) for h in hv)
+            for ak, bk in zip(a, b)
+        ]
+
+    rows = [(0, None), (1, ""), (2, "abc"), (3, "héllo wörld ✓ 𝄞")] + [
+        (10 + r.doc_id, r.text) for r in planted.limit(6).collect()
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.id: list(r.sig) for r in D.minhash_signatures(df).collect()}
+    assert got == {i: ref(t) for i, t in rows}
+
+
 def test_simhash_signature_determinism(planted):
     s1 = D.simhash_signatures(planted).orderBy("id").collect()
     s2 = D.simhash_signatures(planted.repartition(13)).orderBy("id").collect()
@@ -380,10 +410,48 @@ def test_bucket_cap_drops_oversized_buckets(spark):
     assert uncapped.count() == 45 + 1
 
 
-def test_bucket_pairs_est_matches_historical_plan(spark):
-    """The fused bucket+estimate stage (r7 optimization) must emit
-    exactly the pairs of the historical plan: LSH candidate self-join →
-    distinct → signature re-join → zip_with agreement filter.  The
+def _char_shingles(t: str, w: int = 5) -> set[str]:
+    """Python-set reference of the character w-shingles (the whole
+    string when shorter than w)."""
+    return {t[i : i + w] for i in range(max(len(t) - w + 1, 1))}
+
+
+def _oracle_pairs(docs, sigs, threshold_milli, bands=16, rpb=4):
+    """The historical minhash plan as an oracle: LSH candidate self-join
+    → signature re-join → zip_with agreement filter, then an exact
+    Python-set Jaccard filter.  Returns {(id_a, id_b): (inter, uni)}."""
+    num_perm = bands * rpb
+    est_min = max(0, threshold_milli - 150) * num_perm
+    cand = D.minhash_lsh_candidates(sigs, bands, rpb)
+    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("_sa"))
+    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("_sb"))
+    estimated = (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn(
+            "_est",
+            F.size(
+                F.filter(F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda v: v)
+            ),
+        )
+        .filter(F.col("_est") * 1000 >= F.lit(est_min))
+        .select("id_a", "id_b")
+    )
+    texts = dict(docs)
+    want = {}
+    for r in estimated.collect():
+        a, b = _char_shingles(texts[r.id_a]), _char_shingles(texts[r.id_b])
+        inter, uni = len(a & b), len(a | b)
+        if inter * 1000 >= threshold_milli * uni:
+            want[(r.id_a, r.id_b)] = (inter, uni)
+    return want
+
+
+def test_bucket_pairs_matches_historical_plan(spark):
+    """The one-stage bucket worker (estimate + lowest-band emit + exact
+    verify where the pair is born) must emit exactly the pairs of the
+    historical plan — LSH candidate self-join → signature re-join →
+    zip_with agreement → exact Jaccard — with exact (inter, uni).  The
     corpus plants a >64-member near-identical template family so the
     dense (factorized outer-product) big-bucket path runs, not just the
     size-class small-bucket path."""
@@ -405,27 +473,115 @@ def test_bucket_pairs_est_matches_historical_plan(spark):
     docs = spark.createDataFrame(rows, ["id", "t"]).cache()
 
     num_perm, bands, rpb, tm = 64, 16, 4, 500
-    est_min = max(0, tm - 150) * num_perm
     sigs = D.minhash_signatures(docs, "t", "id", num_perm, 5).cache()
-
-    fused = D._bucket_pairs_est(
-        D._banded_sigs(sigs, bands, rpb), num_perm, est_min
-    )
-    cand = D.minhash_lsh_candidates(sigs, bands, rpb)
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("_sa"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("_sb"))
-    historical = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "_est",
-            F.size(
-                F.filter(F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda v: v)
-            ),
-        )
-        .filter(F.col("_est") * 1000 >= F.lit(est_min))
-        .select("id_a", "id_b")
-    )
-    got = {(r["id_a"], r["id_b"]) for r in fused.collect()}
-    want = {(r["id_a"], r["id_b"]) for r in historical.collect()}
+    got = {
+        (r.id_a, r.id_b): (r.inter, r.uni)
+        for r in D._minhash_pairs_core(docs, num_perm, bands, tm, 5).collect()
+    }
+    want = _oracle_pairs(rows, sigs, tm, bands, rpb)
     assert got == want and len(want) > 100
+
+
+@pytest.fixture(scope="module")
+def wide_vocab(spark):
+    """A seeded real-vocabulary corpus: 240 docs over 4,000 random
+    words (far more distinct shingles than a template corpus), with one
+    exact-duplicate group (ids 1000-1002) and one near-duplicate pair
+    (2000, 2001) whose first shared LSH band is NOT band 0."""
+    rng = np.random.RandomState(5)
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
+    vocab = ["".join(rng.choice(letters, rng.randint(3, 10))) for _ in range(4000)]
+
+    def doc(n=60):
+        return " ".join(vocab[j] for j in rng.randint(0, len(vocab), n))
+
+    rows = [(i, doc()) for i in range(240)]
+    dup = doc()
+    rows += [(1000, dup), (1001, dup), (1002, dup)]
+    # near-dup candidates: a few words replaced; keep the first variant
+    # whose band-0 hashes differ from the base but some later band agrees
+    base = doc()
+    variants = []
+    for k in range(40):
+        toks = base.split()
+        for p in rng.choice(len(toks), 3, replace=False):
+            toks[p] = vocab[rng.randint(len(vocab))]
+        variants.append((3000 + k, " ".join(toks)))
+    probe = spark.createDataFrame([(2000, base)] + variants, ["id", "t"])
+    bhs = {
+        r.id: r.bhs
+        for r in D.minhash_signatures(probe, "t", "id")
+        .select("id", D._band_hashes("sig", 16, 4).alias("bhs"))
+        .collect()
+    }
+    near = next(
+        t
+        for i, t in variants
+        if bhs[i][0] != bhs[2000][0]
+        and any(x == y for x, y in zip(bhs[i], bhs[2000]))
+        and len(_char_shingles(t) & _char_shingles(base)) * 1000
+        >= 500 * len(_char_shingles(t) | _char_shingles(base))
+    )
+    rows += [(2000, base), (2001, near)]
+    return rows
+
+
+@pytest.mark.parametrize(
+    "collapse_exact,expand", [(True, "all"), (True, "star"), (False, "all")]
+)
+def test_wide_vocabulary_matches_oracle(spark, wide_vocab, collapse_exact, expand):
+    """Every minhash_dedup mode on a corpus with more than 8,192
+    distinct shingles returns exactly the oracle's pairs (LSH candidate
+    ∧ full-signature estimate ∧ exact Jaccard ≥ t) with exact
+    (inter, uni); "star" returns its representative-level subset plus
+    the (rep, member) spanning pairs.  The planted near-dup pair is
+    found although its first shared band is not band 0."""
+    tm = 500
+    assert len(set().union(*(_char_shingles(t) for _, t in wide_vocab))) > 8192
+    df = spark.createDataFrame(wide_vocab, ["doc_id", "text"])
+    sigs = D.minhash_signatures(df).cache()
+    want = _oracle_pairs(wide_vocab, sigs, tm)
+    assert (1000, 1001) in want and (2000, 2001) in want
+    if expand == "star":
+        rep = {}
+        for i, t in sorted(wide_vocab):
+            rep.setdefault(t, i)
+        reps = set(rep.values())
+        want = {
+            p: v for p, v in want.items() if p[0] in reps and p[1] in reps
+        } | {
+            (rep[t], i): want[(rep[t], i)]
+            for i, t in wide_vocab
+            if rep[t] != i
+        }
+    out = D.minhash_dedup(
+        df, threshold_milli=tm, collapse_exact=collapse_exact, expand=expand
+    ).collect()
+    got = {(r.id_a, r.id_b): (r.inter, r.uni) for r in out}
+    assert len(got) == len(out)
+    assert got == want
+
+
+def test_minhash_dedup_job_count(spark):
+    """Plan-shape guard: one minhash_dedup call on a small corpus runs
+    at most 12 Spark jobs (collapse aggregate, one bucket stage, the
+    exact-group fan-out joins), not one job per private pass."""
+    import random
+
+    rng = random.Random(3)
+    words = [f"v{j}" for j in range(300)]
+    rows = []
+    for i in range(60):
+        base = " ".join(rng.choice(words) for _ in range(50))
+        rows += [(i, base), (100 + i, base)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash_job_count", "minhash_dedup job count")
+    try:
+        n = len(D.minhash_dedup(df, threshold_milli=500).collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("minhash_job_count")
+    assert n >= 60
+    assert len(jobs) <= 12, f"{len(jobs)} jobs"
