@@ -47,6 +47,7 @@ from eodal_spark.operators import text as TX
 from eodal_spark.operators import tiling as TIL
 from eodal_spark.operators import timeseries as TS
 from eodal_spark.operators import zonal as Z
+from eodal_spark.session import spread
 from eodal_spark.sources import pages as P
 from eodal_spark.sources import sensors as SN
 from eodal_spark.sources import warc as WARC
@@ -746,8 +747,8 @@ def _docs_spread(spark, sf_dir):
     100 TB corpus never pays the exchange.  Row set unchanged (gates
     compare sorted)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    target = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() >= target:
+    spread_docs = spread(docs, "doc_id")
+    if spread_docs is docs:
         return docs
     # lazy localCheckpoint = lineage barrier: Catalyst pushes
     # deterministic filters below a bare repartition, so a query that
@@ -756,9 +757,7 @@ def _docs_spread(spark, sf_dir):
     # split (measured 6 s vs 1 s for docs_quality_filter).  The barrier
     # pins evaluation above the spread; materialization is one 15 MB
     # in-memory write on first action of each invocation.
-    return docs.repartition(target, F.col("doc_id")).localCheckpoint(
-        eager=False
-    )
+    return spread_docs.localCheckpoint(eager=False)
 
 
 def _q_docs_exact_dedup(spark, sf_dir):
@@ -2090,8 +2089,8 @@ def _q_emb_quantize_int8(spark, sf_dir):
     spreads the single-split embeddings scan first so the interpreted
     higher-order quantization chain runs on every core, not one
     (measured 5.4 s → sub-second at 22k vectors)."""
-    emb = SIM._spread_corpus(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = spread(
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), "vec_id"
     )
     q = SIM.quantize_int8(emb)
     return q.select(

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from eodal_spark.session import spread
+
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -107,25 +109,6 @@ def _minhash_params(num_perm: int, seed: int = 42):
     return a, b
 
 
-def _spread_for_udf(df: DataFrame, key_col: str) -> DataFrame:
-    """Repartition a small-file input up to the session's default
-    parallelism before an expensive per-row pandas UDF.
-
-    A compact parquet table (50k docs ≈ 15 MB) scans as 1-2 input
-    splits, so a signature UDF downstream of it runs on 1-2 cores no
-    matter how many the cluster has — measured 2/32 cores busy on the
-    sf1.0 documents table (guide §2: partitioning must come from the
-    work, not the file layout).  Hash-repartitioning on the id is
-    deterministic (safe under task retry, unlike round-robin) and a
-    no-op decision at scale: inputs with >= defaultParallelism
-    partitions are returned unchanged, so a 100 TB corpus never pays
-    an extra shuffle."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target, F.col(key_col))
-
-
 def _signature_udf(num_perm: int, w: int, seed: int = 42):
     """Arrow-batched pandas UDF text → MinHash signature (array<long>)
     over the UTF-8 byte ``w``-shingles; per document every window's
@@ -169,9 +152,9 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, sig: array<long>) — MinHash over character shingles
     (:func:`_signature_udf`).  Map-side only — no shuffle (beyond the
-    small-input spread, :func:`_spread_for_udf`)."""
+    small-input spread, :func:`eodal_spark.session.spread`)."""
     sig = _signature_udf(num_perm, w, seed)
-    df = _spread_for_udf(df, id_col)
+    df = spread(df, id_col)
     return df.select(F.col(id_col).alias("id"), sig(F.col(text_col)).alias("sig"))
 
 
@@ -574,7 +557,7 @@ def minhash_dedup(
     docs = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     if not collapse_exact:
         return _minhash_pairs_core(
-            _spread_for_udf(docs, "id"), num_perm, bands, threshold_milli, w
+            spread(docs, "id"), num_perm, bands, threshold_milli, w
         )
     content = F.sha2(F.coalesce(F.col("t"), F.lit("")), 256).alias("_h")
     groups = docs.groupBy(content).agg(
@@ -660,7 +643,7 @@ def simhash_signatures(
             out[i] = np.int64(word & np.uint64(0x7FFFFFFFFFFFFFFF))
         return pd.Series(out)
 
-    df = _spread_for_udf(df, id_col)
+    df = spread(df, id_col)
     return df.select(F.col(id_col).alias("id"), sig(F.col(text_col)).alias("simhash"))
 
 

@@ -141,80 +141,14 @@ def _words(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+", -1), lambda w: F.length(w) > 0)
 
 
-def dup_line_frac_milli(text: Column) -> Column:
-    """Fraction (per-mille) of lines that are duplicates of another
-    line — the first Gopher/MassiveText repetition signal (Rae et al.
-    2021, table A1; public method).  Pure integer arithmetic; native
-    higher-order functions, no UDF."""
-    lines = _lines(text)
-    n = F.size(lines)
-    return F.when(n <= 0, F.lit(0).cast("long")).otherwise(
-        _idiv((n - F.size(F.array_distinct(lines))) * 1000, n)
-    )
-
-
-def dup_line_char_frac_milli(text: Column) -> Column:
-    """Per-mille of CHARACTERS sitting in lines that occur more than
-    once.  The inner occurrence count is a nested filter — O(lines²)
-    per document, fine because lines-per-doc is bounded and tiny next
-    to the scan; still whole-stage codegen."""
-    lines = _lines(text)
-    dup_chars = F.aggregate(
-        F.filter(
-            lines,
-            lambda x: F.size(F.filter(lines, lambda y: y == x)) > 1,
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.length(x),
-    )
-    return _idiv(dup_chars * 1000, F.greatest(F.length(text), F.lit(1)))
-
-
-def top2gram_char_frac_milli(text: Column) -> Column:
-    """Per-mille of characters covered by the most repeated word
-    2-gram: max over distinct 2-grams of count·len(gram), over
-    length(text) — the Gopher top-n-gram family's n=2 member, made
-    argmax-free (count·len avoids cross-engine tie-break divergence)."""
-    words = _words(text)
-    n = F.size(words)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.element_at(words, i), F.element_at(words, i + 1)),
-    )
-    mass = F.array_max(
-        F.transform(
-            F.array_distinct(grams),
-            lambda g: F.size(F.filter(grams, lambda x: x == g)) * F.length(g),
-        )
-    )
-    return F.when(n < 2, F.lit(0).cast("long")).otherwise(
-        _idiv(mass.cast("long") * 1000, F.greatest(F.length(text), F.lit(1)))
-    )
-
-
-def bullet_ellipsis_frac_milli(text: Column) -> Column:
-    """Per-mille of lines that start with a bullet ('-' or '*') or end
-    with an ellipsis ('...') — the Gopher list/truncation heuristics."""
-    lines = _lines(text)
-    n = F.size(lines)
-    hits = F.size(
-        F.filter(
-            lines,
-            lambda x: x.startswith("-")
-            | x.startswith("*")
-            | x.endswith("..."),
-        )
-    )
-    return F.when(n <= 0, F.lit(0).cast("long")).otherwise(
-        _idiv(hits * 1000, n)
-    )
-
-
 def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The repetition-quality battery, staged through MATERIALIZED
-    array columns.
+    """The repetition-quality battery (the Gopher/MassiveText signals,
+    Rae et al. 2021; integer per-mille): duplicate lines, characters in
+    duplicated lines, characters covered by the most repeated word
+    2-gram, and lines that start with a bullet or end with an ellipsis
+    — staged through MATERIALIZED array columns.
 
-    Why not one fused projection of the per-column functions: Spark's
+    Why not one fused projection with one expression per signal: Spark's
     higher-order functions are interpreted (never codegen'd) and a
     lambda body re-evaluates every non-attribute subtree PER ELEMENT —
     ``filter(grams, x == g)`` inside ``transform(distinct(grams), …)``

@@ -19,7 +19,7 @@ import os
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -65,15 +65,22 @@ def partition_metrics(df: DataFrame, stage: str) -> DataFrame:
 def append_stage_metrics(df: DataFrame, stage: str, metrics_dir: str) -> dict:
     """Compute partition metrics for a stage and append them to the
     metrics table (parquet dir, Iceberg in production).  Returns a
-    lineage record {stage, partitions, rows}."""
-    # persist the (tiny) metrics frame: the write and the aggregate are
-    # two actions, and without it each re-executes the stage's full
-    # upstream plan
-    m = partition_metrics(df, stage).persist()
+    lineage record {stage, partitions, rows}.
+
+    ONE Spark action: the lineage totals are an ``Observation`` on the
+    metrics write itself, so the stage's upstream plan runs exactly
+    once with nothing persisted."""
+    obs = Observation()
+    m = partition_metrics(df, stage).observe(
+        obs, F.count(F.lit(1)).alias("partitions"), F.sum("rows").alias("rows")
+    )
     m.write.mode("append").parquet(os.path.join(metrics_dir, "partition_metrics"))
-    agg = m.agg(F.count(F.lit(1)), F.sum("rows")).first()
-    m.unpersist()
-    record = {"stage": stage, "partitions": int(agg[0] or 0), "rows": int(agg[1] or 0)}
+    agg = obs.get
+    record = {
+        "stage": stage,
+        "partitions": int(agg["partitions"] or 0),
+        "rows": int(agg["rows"] or 0),
+    }
     with open(os.path.join(metrics_dir, "lineage.jsonl"), "a") as f:
         f.write(json.dumps(record) + "\n")
     return record

@@ -19,13 +19,27 @@ spatial predicates — the "layout decision" of SURVEY.md §4.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
 import shutil
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+
+
+def _stat_bound(v):
+    """A value in the manifest-stats space: bytes → str, datetime/date →
+    isoformat.  The manifest writer stores footer stats this way, and
+    user range bounds go through the SAME coercion so both sides
+    compare consistently."""
+    if isinstance(v, bytes):
+        return v.decode("utf-8", "replace")
+    if hasattr(v, "isoformat"):
+        return v.isoformat()
+    return v
 
 
 def _file_stats(data_dir: str, cols: tuple[str, ...]) -> list[dict]:
@@ -40,13 +54,6 @@ def _file_stats(data_dir: str, cols: tuple[str, ...]) -> list[dict]:
     subsequent pruned scan).
     """
     import pyarrow.parquet as pq
-
-    def jsonable(v):
-        if isinstance(v, bytes):
-            return v.decode("utf-8", "replace")
-        if hasattr(v, "isoformat"):
-            return v.isoformat()
-        return v
 
     out = []
     names = []
@@ -74,11 +81,93 @@ def _file_stats(data_dir: str, cols: tuple[str, ...]) -> list[dict]:
                 mins.append(st.min)
                 maxs.append(st.max)
             stats[c] = {
-                "min": jsonable(min(mins)) if mins else None,
-                "max": jsonable(max(maxs)) if maxs else None,
+                "min": _stat_bound(min(mins)) if mins else None,
+                "max": _stat_bound(max(maxs)) if maxs else None,
             }
         out.append({"name": name, "rows": md.num_rows, "stats": stats})
     return out
+
+
+def _write_files(
+    df: DataFrame,
+    data_dir: str,
+    stat_cols: tuple[str, ...] = (),
+    partition_cols: tuple[str, ...] = (),
+) -> list[dict]:
+    """Write ``df`` as the parquet files of one new catalog dir and
+    return their manifest entries (name, rows, footer stats on
+    ``stat_cols``, dir, and the hive partition values when
+    ``partition_cols`` — hidden columns already on ``df`` — lay the dir
+    out by partition).  ``df`` arrives clustered: the caller chooses
+    its range/sort/z-order layout.
+
+    Spark's default INT96 timestamps carry NO parquet min/max stats — a
+    timestamp sort column would silently lose both manifest pruning and
+    row-group skipping.  Catalog files are written as TIMESTAMP_MICROS
+    (the Iceberg spec type)."""
+    spark = df.sparkSession
+    ts_conf = "spark.sql.parquet.outputTimestampType"
+    prev_ts = spark.conf.get(ts_conf)
+    try:
+        spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
+        w = df.write.mode("overwrite")
+        if partition_cols:
+            # partitionBy strips the hidden columns from the file bytes —
+            # the logical schema never changes (≡ Iceberg hidden
+            # partitioning; users query ts/host, never day/bucket)
+            w = w.partitionBy(*partition_cols)
+        w.parquet(data_dir)
+    finally:
+        spark.conf.set(ts_conf, prev_ts)
+    dname = os.path.basename(data_dir)
+    files = [{**f, "dir": dname} for f in _file_stats(data_dir, stat_cols)]
+    if partition_cols:
+        for f in files:
+            f["partition"] = _parse_partition(f["name"])
+    return files
+
+
+def _delete_entries(df: DataFrame, ddir: str, **fields) -> list[dict]:
+    """Write a delete file set (equality keys or positions) and return
+    its manifest entries.  The on-disk size feeds the read-time
+    broadcast decision: row count alone ignores key WIDTH (1M long-URL
+    keys can be hundreds of MB — too big to force-broadcast)."""
+    return [
+        {
+            "dir": f["dir"],
+            "name": f["name"],
+            "rows": f["rows"],
+            "bytes": os.path.getsize(os.path.join(ddir, f["name"])),
+            **fields,
+        }
+        for f in _write_files(df, ddir)
+    ]
+
+
+def _zorder_key(df: DataFrame, cols, bits: int) -> Column:
+    """2-D z-curve key over the two ``cols`` of ``df``, bucketed between
+    their global bounds — ONE tiny agg, the same cost class as the
+    footer-stats read."""
+    from pyspark.sql import functions as F
+
+    from eodal_spark import grid
+
+    za, zb = cols
+    b = df.agg(F.min(za), F.max(za), F.min(zb), F.max(zb)).first()
+    return grid.zorder_key_2d(
+        F.col(za), F.col(zb),
+        b[0] if b[0] is not None else 0.0,
+        b[1] if b[1] is not None else 1.0,
+        b[2] if b[2] is not None else 0.0,
+        b[3] if b[3] is not None else 1.0,
+        bits=bits,
+    )
+
+
+def _rm_data_dir(path: str) -> None:
+    """Remove a data dir together with its bloom sidecar (if any)."""
+    shutil.rmtree(path, ignore_errors=True)
+    shutil.rmtree(_bloom_sidecar(path), ignore_errors=True)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -96,17 +185,6 @@ def _iso_t(v: str) -> str:
     """'YYYY-MM-DD HH:MM:SS' → isoformat 'T' separator (stats form)."""
     if len(v) > 10 and v[10] == " ":
         return v[:10] + "T" + v[11:]
-    return v
-
-
-def _stat_bound(v):
-    """User range bound → the manifest-stats value space (the SAME
-    coercion the manifest writer applies: bytes → str, datetime/date →
-    isoformat)."""
-    if isinstance(v, bytes):
-        return v.decode("utf-8", "replace")
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
     return v
 
 
@@ -214,8 +292,6 @@ def _write_bloom_sidecar(
     scan-time probe ``str(value)`` renders identically.  NULLs are not
     indexed (an equality probe is never NULL).
     """
-    import functools
-
     from pyspark.sql import functions as F
 
     src = spark.read.parquet(data_dir)
@@ -477,48 +553,10 @@ class SnapshotCatalog:
                 )
         else:
             parent_snap = man["snapshots"][-1] if man["snapshots"] else None
-        # max+1, NOT len+1: expire_snapshots truncates the front of the
-        # list, and len+1 would then collide with (and clobber the
-        # v-dir of) a surviving snapshot.  Branch snapshots share the
-        # sid space — ids stay globally monotonic so equality-delete
-        # sequence semantics survive a later publish/cherry-pick.
-        sid = max(
-            (
-                s["snapshot_id"]
-                for s in man["snapshots"] + branch_snaps
-            ),
-            default=0,
-        ) + 1
-        # unique dir per COMMIT ATTEMPT: two racing writers both compute
-        # sid N, but only the manifest CAS decides the winner — a shared
-        # v{N} dir would let the loser clobber the winner's committed
-        # data files before its own commit is rejected.  _dir_sid parses
-        # the leading digits, so sequence semantics are unaffected; the
-        # loser's orphan dir is removed on ConcurrentCommitError.
-        import uuid
-
-        data_dir = os.path.join(
-            self._tdir(table), f"v{sid}-{uuid.uuid4().hex[:8]}"
-        )
+        sid = self._next_sid(man)
+        data_dir = self._new_dir(table, sid)
         if zorder:
-            from pyspark.sql import functions as F
-
-            from eodal_spark import grid
-
-            za, zb = zorder
-            # ONE tiny agg for the global bounds the uniform bucketing
-            # needs — same cost class as the footer-stats read
-            b = df.agg(
-                F.min(za), F.max(za), F.min(zb), F.max(zb)
-            ).first()
-            zk = grid.zorder_key_2d(
-                F.col(za), F.col(zb),
-                b[0] if b[0] is not None else 0.0,
-                b[1] if b[1] is not None else 1.0,
-                b[2] if b[2] is not None else 0.0,
-                b[3] if b[3] is not None else 1.0,
-                bits=zorder_bits,
-            )
+            zk = _zorder_key(df, zorder, zorder_bits)
             parts = (n_files,) if n_files else ()
             # the projection DROPS the key after the sort — files carry
             # only the user schema; clustering shows up purely in the
@@ -536,117 +574,174 @@ class SnapshotCatalog:
             )
         else:
             out = df.repartition(n_files) if n_files else df
-        # Spark's default INT96 timestamps carry NO parquet min/max
-        # stats — a timestamp sort column would silently lose both
-        # manifest pruning and row-group skipping.  Catalog data files
-        # are written as TIMESTAMP_MICROS (the Iceberg spec type).
-        spark = df.sparkSession
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts = spark.conf.get(ts_conf)
-        try:
-            spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-            if pv:
-                # hidden partitioning: derive the transform columns,
-                # hive-partition the physical layout by them, and let
-                # partitionBy strip them from the file bytes — the
-                # logical schema never changes (≡ Iceberg hidden
-                # partitioning; users query ts/host, never day/bucket)
-                withpv = out
-                for name, col_ in pv:
-                    withpv = withpv.withColumn(name, col_)
-                if n_files and not sort_by and not zorder:
-                    withpv = withpv.repartition(n_files, *[n for n, _ in pv])
-                withpv.write.mode("overwrite").partitionBy(
-                    *[n for n, _ in pv]
-                ).parquet(data_dir)
-            else:
-                out.write.mode("overwrite").parquet(data_dir)
-        finally:
-            spark.conf.set(ts_conf, prev_ts)
+        # hidden partitioning: derive the transform columns and
+        # hive-partition the physical layout by them
+        for name, col_ in pv:
+            out = out.withColumn(name, col_)
+        if pv and n_files and not sort_by and not zorder:
+            out = out.repartition(n_files, *[n for n, _ in pv])
+        files = _write_files(
+            out,
+            data_dir,
+            tuple(sort_by) if sort_by else tuple(zorder),
+            tuple(n for n, _ in pv),
+        )
         dname = os.path.basename(data_dir)
-        stat_cols = tuple(sort_by) if sort_by else tuple(zorder)
-        files = [
-            {**f, "dir": dname} for f in _file_stats(data_dir, stat_cols)
-        ]
-        if pv:
-            for f in files:
-                f["partition"] = _parse_partition(f["name"])
         if bloom_cols:
             # ONE extra job over the NEW files only — O(new data), like
             # the footer stats; appends never re-bloom the parent's dirs
             _write_bloom_sidecar(
-                spark, data_dir, tuple(bloom_cols), bloom_bits, bloom_k
+                df.sparkSession,
+                data_dir,
+                tuple(bloom_cols),
+                bloom_bits,
+                bloom_k,
             )
         # row count from the same footer reads that produced the stats —
         # no second Spark job per commit
         n = sum(f["rows"] for f in files)
-        if mode == "append" and parent_snap is not None:
-            parent = parent_snap
-            parent_files = self._snap_files(parent)
-            if not parent_files:
-                # legacy pre-stats snapshot: reconstruct its file list
-                # from the data dir rather than silently dropping the
-                # parent's rows from the child snapshot
-                pdir = os.path.basename(parent["path"])
-                parent_files = [
-                    {**f, "dir": pdir}
-                    for f in _file_stats(
-                        parent["path"],
-                        tuple(parent.get("sort_by") or ()),
-                    )
-                ]
-                if not parent_files:
-                    raise ValueError(
-                        f"cannot append onto snapshot "
-                        f"{parent['snapshot_id']}: no data files found "
-                        f"under {parent['path']}"
-                    )
-            files = parent_files + files
-            n += parent["row_count"]
-        carry = (
-            parent_snap
-            if mode == "append" and parent_snap is not None
-            else {}
-        )
-        delete_files = list(carry.get("delete_files") or [])
-        delete_ranges = list(carry.get("delete_ranges") or [])
-        pos_delete_files = list(carry.get("pos_delete_files") or [])
-        blooms = dict(carry.get("blooms") or {})
-        if bloom_cols:
-            blooms[dname] = {
-                "cols": list(bloom_cols),
-                "bits": int(bloom_bits),
-                "k": int(bloom_k),
-            }
-        pspecs = dict(carry.get("partition_specs") or {})
-        if pv:
+        append = mode == "append" and parent_snap is not None
+        if append:
+            files = self._snap_files(parent_snap) + files
+            n += parent_snap["row_count"]
+        self._register_new_columns(man, df)
+        return self._commit_snapshot(
+            table,
+            man,
+            sid,
+            parent_snap,
+            carry=append,
+            mode=mode,
+            path=data_dir,
+            new_dirs=[data_dir],
+            files=files,
+            row_count=n,
+            sort_by=sort_by,
+            zorder=zorder,
+            blooms=(
+                {
+                    dname: {
+                        "cols": list(bloom_cols),
+                        "bits": int(bloom_bits),
+                        "k": int(bloom_k),
+                    }
+                }
+                if bloom_cols
+                else {}
+            ),
             # spec recorded PER DIR: partition EVOLUTION is just a later
             # write with a different spec — old dirs keep theirs, scan
             # consults each file's own dir spec (≡ Iceberg spec-id)
-            pspecs[dname] = [list(e) for e in partition_by]
+            partition_specs=(
+                {dname: [list(e) for e in partition_by]} if pv else {}
+            ),
+            meta=meta,
+            branch=branch,
+        )
+
+    # -- the commit path ------------------------------------------------
+
+    @staticmethod
+    def _next_sid(man: dict) -> int:
+        """THE snapshot-id allocator: max+1 over main AND branch
+        snapshots.  max+1, not len+1: expire_snapshots truncates the
+        front of the list, and len+1 would then collide with (and
+        clobber the v-dir of) a surviving snapshot.  Branch snapshots
+        share the sid space — ids stay globally unique and monotonic,
+        so a branch append can still be cherry-picked after main moved,
+        and equality-delete sequence semantics survive a later
+        publish/cherry-pick."""
+        return max(
+            (
+                s["snapshot_id"]
+                for s in man["snapshots"] + (man.get("branch_snapshots") or [])
+            ),
+            default=0,
+        ) + 1
+
+    def _new_dir(self, table: str, sid: int) -> str:
+        """A fresh dir for one commit ATTEMPT: two racing writers both
+        compute sid N, but only the manifest CAS decides the winner — a
+        shared v{N} dir would let the loser clobber the winner's
+        committed files before its own commit is rejected.
+        :meth:`_dir_sid` parses the leading digits, so sequence
+        semantics are unaffected; the loser's dir is removed by
+        :meth:`_commit_snapshot`."""
+        return os.path.join(self._tdir(table), f"v{sid}-{uuid.uuid4().hex[:8]}")
+
+    def _commit_snapshot(
+        self,
+        table: str,
+        man: dict,
+        sid: int,
+        parent: dict | None,
+        *,
+        mode: str,
+        files: list[dict],
+        row_count: int,
+        path: str | None = None,
+        new_dirs: tuple | list = (),
+        carry: bool = True,
+        sort_by=None,
+        zorder=None,
+        delete_files: list | tuple = (),
+        delete_ranges: list | tuple = (),
+        pos_delete_files: list | tuple = (),
+        blooms: dict | None = None,
+        partition_specs: dict | None = None,
+        meta: dict | None = None,
+        branch: str | None = None,
+    ) -> dict:
+        """THE snapshot commit — every data/delete commit goes through
+        here, so the record shape, the carried state and the loser's
+        cleanup cannot diverge between commit kinds.
+
+        Builds the snapshot record on top of ``parent``: with ``carry``
+        the parent's delete tiers, bloom configs, partition specs and
+        (unless ``sort_by`` is given) sort order carry forward and the
+        commit's own entries are added to them; without it (overwrite)
+        the snapshot holds only its own.  ``path=None`` marks a
+        metadata-only commit: its v-dir is named but never created
+        (rollback/expire rmtree it harmlessly; pointing at the table
+        dir instead would let rollback delete the table).  ``zorder`` is
+        recorded only by the commit kinds that own a layout (write,
+        binpack).  ``files`` are sealed into manifest segments, the
+        record is appended to main (or to ``branch``, moving its head)
+        and the manifest CAS runs; if it loses, this attempt's
+        ``new_dirs``, their bloom sidecars and its new segments are
+        removed before :class:`ConcurrentCommitError` propagates."""
+        base = parent if carry and parent is not None else {}
         segments = self._seal_files(table, sid, files)
         snap = {
             "snapshot_id": sid,
-            "parent_id": (
-                parent_snap["snapshot_id"]
-                if parent_snap is not None
-                else None
-            ),
+            "parent_id": parent["snapshot_id"] if parent is not None else None,
             "committed_at": time.time(),
-            "path": data_dir,
-            "row_count": n,
-            "sort_by": list(sort_by),
-            "zorder": list(zorder),
-            "mode": mode,
-            "segments": segments,
-            "delete_files": delete_files,
-            "delete_ranges": delete_ranges,
-            "pos_delete_files": pos_delete_files,
-            "blooms": blooms,
-            "partition_specs": pspecs,
-            "meta": meta or {},
+            "path": path or os.path.join(self._tdir(table), f"v{sid}-meta"),
+            "row_count": row_count,
+            "sort_by": list(
+                base.get("sort_by") or () if sort_by is None else sort_by
+            ),
         }
-        self._register_new_columns(man, df)
+        if zorder is not None:
+            snap["zorder"] = list(zorder)
+        snap.update(
+            {
+                "mode": mode,
+                "segments": segments,
+                "delete_files": list(base.get("delete_files") or [])
+                + list(delete_files),
+                "delete_ranges": list(base.get("delete_ranges") or [])
+                + list(delete_ranges),
+                "pos_delete_files": list(base.get("pos_delete_files") or [])
+                + list(pos_delete_files),
+                "blooms": {**(base.get("blooms") or {}), **(blooms or {})},
+                "partition_specs": {
+                    **(base.get("partition_specs") or {}),
+                    **(partition_specs or {}),
+                },
+                "meta": meta or {},
+            }
+        )
         if branch is not None:
             man.setdefault("branch_snapshots", []).append(snap)
             man["branches"][branch]["head"] = sid
@@ -655,9 +750,15 @@ class SnapshotCatalog:
         try:
             self._commit_manifest(table, man)  # atomic commit
         except ConcurrentCommitError:
-            shutil.rmtree(data_dir, ignore_errors=True)  # orphan loser dir
-            shutil.rmtree(_bloom_sidecar(data_dir), ignore_errors=True)
-            self._drop_new_segments(table, segments, sid)
+            for d in new_dirs:
+                _rm_data_dir(d)
+            # reused refs from older commits stay — they are live via
+            # the winning history
+            prefix = f"seg-{sid:08d}-"
+            self._unlink_segments(
+                table,
+                [r["name"] for r in segments if r["name"].startswith(prefix)],
+            )
             raise
         return snap
 
@@ -669,16 +770,13 @@ class SnapshotCatalog:
     # plus coarse per-segment stats (rows, dirs, column bounds), so:
     #   * a commit appends O(new files) manifest bytes — reused parent
     #     segments are re-referenced, never rewritten (at 100 TB / 100k
-    #     files the old single-JSON design serialized the whole file
-    #     list per commit and parsed it per query — the last O(table)
-    #     driver cost in the engine);
+    #     files one inline file list would be serialized per commit and
+    #     parsed per query — an O(table) driver cost);
     #   * scan() prunes whole SEGMENTS from the ref bounds before
     #     loading any entry — manifest-level skipping above the
     #     file-level skipping (Iceberg's manifest-list partition
     #     summaries).
-    # Legacy snapshots with inline "files" lists keep working; the
-    # first new commit on top of one migrates its entries into a
-    # segment.  Segments are immutable → cached per path.
+    # Segments are immutable → cached per path.
 
     @staticmethod
     def _seg_dir(tdir: str) -> str:
@@ -787,8 +885,6 @@ class SnapshotCatalog:
             else:
                 leftover.extend(entries)
         if leftover:
-            import uuid
-
             segdir = self._seg_dir(tdir)
             os.makedirs(segdir, exist_ok=True)
             newname = f"seg-{sid:08d}-{uuid.uuid4().hex[:8]}.json"
@@ -803,57 +899,54 @@ class SnapshotCatalog:
             refs.append(self._seg_ref(newname, clean))
         return refs
 
-    def _drop_new_segments(self, table: str, refs: list[dict], sid: int) -> None:
-        """Remove segments written by a commit attempt that lost the
-        manifest CAS (reused refs from older commits stay — they are
-        live via the winning history)."""
-        prefix = f"seg-{sid:08d}-"
-        for r in refs:
-            if r["name"].startswith(prefix):
-                p = os.path.join(self._seg_dir(self._tdir(table)), r["name"])
-                _SEG_CACHE.pop(p, None)
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
+    def _unlink_segments(self, table: str, names) -> None:
+        """Delete segment files (and their cache entries) — the one
+        unlink path for lost commits, expiry, rollback and orphan GC."""
+        segdir = self._seg_dir(self._tdir(table))
+        for name in names:
+            p = os.path.join(segdir, name)
+            _SEG_CACHE.pop(p, None)
+            try:
+                os.unlink(p)
+            except OSError:
+                pass
 
-    def _snap_dirs(self, snap: dict) -> set[str]:
-        """Data dirs a snapshot's files live in — from the segment refs
-        when segmented (no segment load), else from the inline list."""
-        segs = snap.get("segments")
-        if segs is not None:
-            out: set[str] = set()
-            for r in segs:
-                out |= set(r.get("dirs") or [])
-            return out
-        return {f["dir"] for f in self._snap_files(snap)}
+    @staticmethod
+    def _snap_dirs(snap: dict) -> set[str]:
+        """Data dirs a snapshot's files live in — from the segment refs,
+        no segment load."""
+        return {d for r in snap["segments"] for d in r["dirs"]}
 
-    def _live_segments(self, snaps: list[dict]) -> set[str]:
-        return {
-            r["name"] for s in snaps for r in (s.get("segments") or [])
-        }
+    def _live_dirs(self, snaps: list[dict]) -> set[str]:
+        """Every dir the snapshots reference: their own v-dirs, the data
+        dirs of their files and their delete-file dirs — the GC
+        liveness set of :meth:`expire_snapshots` and
+        :meth:`remove_orphan_files`."""
+        live: set[str] = set()
+        for s in snaps:
+            live.add(os.path.basename(s["path"]))
+            live |= self._snap_dirs(s)
+            live |= {
+                d["dir"]
+                for d in (s.get("delete_files") or [])
+                + (s.get("pos_delete_files") or [])
+            }
+        return live
+
+    @staticmethod
+    def _live_segments(snaps: list[dict]) -> set[str]:
+        return {r["name"] for s in snaps for r in s["segments"]}
 
     def _snap_files(self, snap: dict) -> list[dict]:
-        """File entries of a snapshot.  Segmented snapshots resolve
-        their segment refs (each entry tagged ``_seg`` with its source
-        segment so :meth:`_seal_files` can re-reference intact segments
-        on the next commit); legacy snapshots read the inline list
-        (entries written before the append feature lack 'dir' — they
-        belong to the snapshot's own v-dir)."""
-        segs = snap.get("segments")
-        if segs is not None:
-            tdir = os.path.dirname(snap["path"])
-            out: list[dict] = []
-            for ref in segs:
-                out.extend(
-                    {**f, "_seg": ref["name"]}
-                    for f in self._load_segment(tdir, ref["name"])
-                )
-            return out
-        d = os.path.basename(snap["path"])
+        """File entries of a snapshot, resolved from its segment refs.
+        Each entry is tagged ``_seg`` with its source segment so
+        :meth:`_seal_files` can re-reference intact segments on the next
+        commit."""
+        tdir = os.path.dirname(snap["path"])
         return [
-            (f if "dir" in f else {**f, "dir": d})
-            for f in (snap.get("files") or [])
+            {**f, "_seg": ref["name"]}
+            for ref in snap["segments"]
+            for f in self._load_segment(tdir, ref["name"])
         ]
 
     def _file_paths(self, table: str, snap: dict) -> list[str]:
@@ -946,16 +1039,7 @@ class SnapshotCatalog:
                 f"no snapshots for table {table!r} — write data before "
                 "evolving its schema"
             )
-        snap = man["snapshots"][-1]
-        files = self._snap_files(snap)
-        paths = (
-            [
-                os.path.join(self._tdir(table), f["dir"], f["name"])
-                for f in files
-            ]
-            if files
-            else [snap["path"]]
-        )
+        paths = self._file_paths(table, man["snapshots"][-1])
         schema = self._read_files(spark, paths, merge=True).schema
         fields = [
             {"id": i + 1, "name": f.name, "type": f.dataType.simpleString()}
@@ -1154,8 +1238,11 @@ class SnapshotCatalog:
         if not state or not state["log"]:
             return attach(self._read_files(spark, paths, merge=merge))
         by_ver: dict[int, list[str]] = {}
+        tdir = self._tdir(table)
         for p in paths:
-            sid = self._dir_sid(os.path.basename(os.path.dirname(p)))
+            # the commit dir is the path's FIRST component under the
+            # table: hive-partitioned files nest under pv= subdirs
+            sid = self._dir_sid(os.path.relpath(p, tdir).split(os.sep)[0])
             vi = next(
                 (
                     i
@@ -1225,109 +1312,73 @@ class SnapshotCatalog:
             raise FileNotFoundError(f"no snapshots for table {table}")
         parent = man["snapshots"][-1]
         parent_files = self._snap_files(parent)
-        if not parent_files:
-            # legacy pre-stats parent: reconstruct its file list (same
-            # as write(mode="append")) — an empty files list would make
-            # read() fall through to the delete-KEYS dir and return the
-            # keys as table data
-            pdir = os.path.basename(parent["path"])
-            parent_files = [
-                {**f, "dir": pdir}
-                for f in _file_stats(
-                    parent["path"], tuple(parent.get("sort_by") or ())
-                )
-            ]
-            if not parent_files:
-                raise ValueError(
-                    f"cannot delete from snapshot "
-                    f"{parent['snapshot_id']}: no data files found "
-                    f"under {parent['path']}"
-                )
         key_cols = list(keys.columns)
-        schema_state = man.get("schema")
-        for d in parent.get("delete_files") or []:
+        self._check_delete_keys(table, man, parent_files, key_cols, "delete")
+        sid = self._next_sid(man)
+        ddir = self._new_dir(table, sid)
+        new_dels = _delete_entries(
+            keys.select(*key_cols).distinct().repartition(n_files),
+            ddir,
+            key_cols=key_cols,
+            sid=sid,
+        )
+        return self._commit_snapshot(
+            table,
+            man,
+            sid,
+            parent,
+            mode="delete",
+            path=ddir,
+            new_dirs=[ddir],
+            files=parent_files,
+            row_count=parent["row_count"],
+            delete_files=new_dels,
+        )
+
+    def _check_delete_keys(
+        self,
+        table: str,
+        man: dict,
+        files: list[dict],
+        key_cols: list[str],
+        what: str,
+    ) -> None:
+        """Validate equality-delete key columns before anything is
+        written: the table's existing equality deletes must use the same
+        key (mixed keys are not supported), and every key column must
+        exist in the data — a mistyped key would commit fine and then
+        break every read until rollback.  With schema evolution active
+        the check is against the CURRENT logical schema, since a probe
+        file may physically predate a rename."""
+        state = man.get("schema")
+        for d in man["snapshots"][-1].get("delete_files") or []:
             # compare in CURRENT names — an old delete's recorded names
             # may predate a rename of the same field
             if self._translate_cols(
-                schema_state, d["key_cols"], d.get("schema_sid", d["sid"])
+                state, d["key_cols"], d.get("schema_sid", d["sid"])
             ) != key_cols:
                 raise ValueError(
                     f"table {table!r} already has equality deletes on "
                     f"{d['key_cols']} — mixed delete keys are not "
                     "supported; compact() first"
                 )
-        # a mistyped key column would commit fine and then break every
-        # read until rollback — validate against the data schema now
-        # (the CURRENT logical schema when evolution is active: a probe
-        # file may physically predate a rename)
-        if schema_state:
-            live = {f["name"] for f in schema_state["fields"]}
-            missing = [c for c in key_cols if c not in live]
-        else:
+        if state:
+            live = {f["name"] for f in state["fields"]}
+        elif files:
             import pyarrow.parquet as pq
 
             probe = os.path.join(
-                self._tdir(table),
-                parent_files[0]["dir"],
-                parent_files[0]["name"],
+                self._tdir(table), files[0]["dir"], files[0]["name"]
             )
             live = set(pq.read_schema(probe).names)
-            missing = [c for c in key_cols if c not in live]
+        else:
+            live = set()
+        missing = [c for c in key_cols if c not in live]
         if missing:
             raise ValueError(
-                f"delete key column(s) {missing} not in table "
+                f"{what} key column(s) {missing} not in table "
                 f"{table!r}'s data schema {sorted(live)}"
             )
-        import uuid
-
-        sid = max(s["snapshot_id"] for s in man["snapshots"]) + 1
-        ddir = os.path.join(
-            self._tdir(table), f"v{sid}-{uuid.uuid4().hex[:8]}"
-        )
-        keys.select(*key_cols).distinct().repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(ddir)
-        new_dels = [
-            {
-                "dir": os.path.basename(ddir),
-                "name": f["name"],
-                "rows": f["rows"],
-                # on-disk size feeds the read-time broadcast decision:
-                # row count alone ignores key WIDTH (1M long-URL keys
-                # can be hundreds of MB — too big to force-broadcast)
-                "bytes": os.path.getsize(os.path.join(ddir, f["name"])),
-                "key_cols": key_cols,
-                "sid": sid,
-            }
-            for f in _file_stats(ddir, tuple(key_cols))
-        ]
-        segments = self._seal_files(table, sid, parent_files)
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": parent["snapshot_id"],
-            "committed_at": time.time(),
-            "path": ddir,
-            "row_count": parent["row_count"],
-            "sort_by": list(parent.get("sort_by") or ()),
-            "mode": "delete",
-            "segments": segments,
-            "delete_files": (
-                list(parent.get("delete_files") or []) + new_dels
-            ),
-            "delete_ranges": list(parent.get("delete_ranges") or []),
-            "pos_delete_files": list(parent.get("pos_delete_files") or []),
-            "blooms": dict(parent.get("blooms") or {}),
-            "partition_specs": dict(parent.get("partition_specs") or {}),
-            "meta": {},
-        }
-        man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            shutil.rmtree(ddir, ignore_errors=True)
-            self._drop_new_segments(table, segments, sid)
-            raise
-        return snap
 
     def upsert(
         self,
@@ -1373,64 +1424,10 @@ class SnapshotCatalog:
             )
         parent = man["snapshots"][-1]
         parent_files = self._snap_files(parent)
-        if not parent_files:
-            pdir = os.path.basename(parent["path"])
-            parent_files = [
-                {**f, "dir": pdir}
-                for f in _file_stats(
-                    parent["path"], tuple(parent.get("sort_by") or ())
-                )
-            ]
-            if not parent_files:
-                raise ValueError(
-                    f"cannot upsert into snapshot "
-                    f"{parent['snapshot_id']}: no data files found "
-                    f"under {parent['path']}"
-                )
-        schema_state = man.get("schema")
-        for d in parent.get("delete_files") or []:
-            # compare in CURRENT names — an old delete's recorded names
-            # may predate a rename of the same field
-            if self._translate_cols(
-                schema_state, d["key_cols"], d.get("schema_sid", d["sid"])
-            ) != key_cols:
-                raise ValueError(
-                    f"table {table!r} already has equality deletes on "
-                    f"{d['key_cols']} — mixed delete keys are not "
-                    "supported; compact() first"
-                )
-        # a mistyped key column would commit fine and break every read
-        # until rollback — validate against the data schema now (same
-        # guard as delete_keys; CURRENT logical schema when evolution is
-        # active, since a probe file may physically predate a rename)
-        if schema_state:
-            live = {f["name"] for f in schema_state["fields"]}
-        else:
-            import pyarrow.parquet as pq
-
-            probe = os.path.join(
-                self._tdir(table),
-                parent_files[0]["dir"],
-                parent_files[0]["name"],
-            )
-            live = set(pq.read_schema(probe).names)
-        not_in_data = [c for c in key_cols if c not in live]
-        if not_in_data:
-            raise ValueError(
-                f"upsert key column(s) {not_in_data} not in table "
-                f"{table!r}'s data schema {sorted(live)}"
-            )
-        import uuid
-
-        sid = max(s["snapshot_id"] for s in man["snapshots"]) + 1
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts = spark.conf.get(ts_conf)
-        data_dir = os.path.join(
-            self._tdir(table), f"v{sid}-{uuid.uuid4().hex[:8]}"
-        )
-        kdir = os.path.join(
-            self._tdir(table), f"v{sid}-{uuid.uuid4().hex[:8]}"
-        )
+        self._check_delete_keys(table, man, parent_files, key_cols, "upsert")
+        sid = self._next_sid(man)
+        data_dir = self._new_dir(table, sid)
+        kdir = self._new_dir(table, sid)
         sort_by = tuple(parent.get("sort_by") or ())
         out = df
         if sort_by and all(c in df.columns for c in sort_by):
@@ -1440,69 +1437,37 @@ class SnapshotCatalog:
             )
         elif n_files:
             out = df.repartition(n_files)
-        try:
-            spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-            out.write.mode("overwrite").parquet(data_dir)
-            df.select(*key_cols).distinct().repartition(1).write.mode(
-                "overwrite"
-            ).parquet(kdir)
-        finally:
-            spark.conf.set(ts_conf, prev_ts)
-        dname = os.path.basename(data_dir)
-        new_files = [
-            {**f, "dir": dname} for f in _file_stats(data_dir, sort_by)
-        ]
-        n_new = sum(f["rows"] for f in new_files)
-        new_dels = [
-            {
-                "dir": os.path.basename(kdir),
-                "name": f["name"],
-                "rows": f["rows"],
-                "bytes": os.path.getsize(os.path.join(kdir, f["name"])),
-                "key_cols": key_cols,
-                # PARENT's sequence number: the delete applies to every
-                # file committed at or before the parent, never to this
-                # commit's own data files (dir sid > parent sid)
-                "sid": parent["snapshot_id"],
-                # names in ``key_cols`` are CURRENT at *this* commit,
-                # not the parent's — a rename committed between the
-                # parent snapshot and this upsert changes which schema
-                # version the names belong to, so schema translation
-                # must anchor on this commit's own sid (sequence
-                # semantics above stay on the parent's)
-                "schema_sid": sid,
-            }
-            for f in _file_stats(kdir, tuple(key_cols))
-        ]
-        segments = self._seal_files(table, sid, parent_files + new_files)
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": parent["snapshot_id"],
-            "committed_at": time.time(),
-            "path": data_dir,
-            "row_count": parent["row_count"] + n_new,
-            "sort_by": list(sort_by),
-            "mode": "upsert",
-            "segments": segments,
-            "delete_files": (
-                list(parent.get("delete_files") or []) + new_dels
-            ),
-            "delete_ranges": list(parent.get("delete_ranges") or []),
-            "pos_delete_files": list(parent.get("pos_delete_files") or []),
-            "blooms": dict(parent.get("blooms") or {}),
-            "partition_specs": dict(parent.get("partition_specs") or {}),
-            "meta": meta or {},
-        }
+        new_files = _write_files(out, data_dir, sort_by)
+        new_dels = _delete_entries(
+            df.select(*key_cols).distinct().repartition(1),
+            kdir,
+            key_cols=key_cols,
+            # PARENT's sequence number: the delete applies to every
+            # file committed at or before the parent, never to this
+            # commit's own data files (dir sid > parent sid)
+            sid=parent["snapshot_id"],
+            # names in ``key_cols`` are CURRENT at *this* commit, not
+            # the parent's — a rename committed between the parent
+            # snapshot and this upsert changes which schema version the
+            # names belong to, so schema translation must anchor on
+            # this commit's own sid (sequence semantics above stay on
+            # the parent's)
+            schema_sid=sid,
+        )
         self._register_new_columns(man, df)
-        man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            shutil.rmtree(kdir, ignore_errors=True)
-            self._drop_new_segments(table, segments, sid)
-            raise
-        return snap
+        return self._commit_snapshot(
+            table,
+            man,
+            sid,
+            parent,
+            mode="upsert",
+            path=data_dir,
+            new_dirs=[data_dir, kdir],
+            files=parent_files + new_files,
+            row_count=parent["row_count"] + sum(f["rows"] for f in new_files),
+            delete_files=new_dels,
+            meta=meta,
+        )
 
     def delete_range(
         self,
@@ -1545,34 +1510,7 @@ class SnapshotCatalog:
             raise FileNotFoundError(f"no snapshots for table {table}")
         parent = man["snapshots"][-1]
         parent_files = self._snap_files(parent)
-        if not parent_files:
-            raise ValueError(
-                f"cannot delete from pre-stats snapshot "
-                f"{parent['snapshot_id']} — compact() first"
-            )
-        sid = max(s["snapshot_id"] for s in man["snapshots"]) + 1
         schema_state = man.get("schema")
-        _cur_id = (
-            {f["name"]: f["id"] for f in schema_state["fields"]}
-            if schema_state
-            else {}
-        )
-
-        def _stat_name(f: dict) -> str | None:
-            # pre-rename files keep stats under their write-time name.
-            # None = the file's write-time schema has NO column with the
-            # CURRENT field id (e.g. ``col`` was dropped and re-added:
-            # old files hold only the RETIRED column's bytes/stats under
-            # the same name) → treat as no-stats, never fall back to the
-            # raw name — matching by the retired column's stats would
-            # judge files "fully deleted" by values the current column
-            # does not contain (irreversible data loss)
-            if not schema_state or not schema_state["log"]:
-                return col
-            then = self._fields_for_sid(
-                schema_state, self._dir_sid(f["dir"])
-            )
-            return {x["id"]: x["name"] for x in then}.get(_cur_id.get(col))
 
         def fully_deleted(f: dict) -> bool:
             # dropping a file here is IRREVERSIBLE after expire/compact,
@@ -1582,7 +1520,13 @@ class SnapshotCatalog:
             # Mirrors scan()'s guards: a 'YYYY-MM-DD HH:MM:SS' string
             # bound sorts BEFORE every same-day 'T'-isoformat stat
             # (' ' < 'T') and would otherwise misclassify coverage.
-            st = (f.get("stats") or {}).get(_stat_name(f))
+            # A None stat name (the current column is not the one the
+            # file's stats describe) is no-stats: never judge a file
+            # "fully deleted" by values the current column does not
+            # contain (irreversible data loss).
+            st = (f.get("stats") or {}).get(
+                self._stat_name(schema_state, f, col)
+            )
             if not st or st["min"] is None or st["max"] is None:
                 return False
             stat_is_str = isinstance(st["min"], str)
@@ -1610,44 +1554,26 @@ class SnapshotCatalog:
                 kept.append(f)
         if not kept and parent_files:
             # full-table purge: keep the smallest covered file as a
-            # SCHEMA ANCHOR.  A files==[] snapshot is indistinguishable
-            # from a legacy pre-stats one, so read()/scan()/compact()
-            # would fall back to snap['path'] — the never-created
-            # v{sid}-meta dir — and append would listdir it.  The
-            # anchor's rows are still removed by the read-time residual
-            # filter (its dir sid < this delete's sid), so reads return
-            # a schema-correct EMPTY relation; row_count stays 0.
+            # SCHEMA ANCHOR — a snapshot with no files has no schema to
+            # read, and append would have no parent schema to merge
+            # with.  The anchor's rows are still removed by the
+            # read-time residual filter (its dir sid < this delete's
+            # sid), so reads return a schema-correct EMPTY relation;
+            # row_count stays 0.
             anchor = min(parent_files, key=lambda f: int(f.get("rows") or 0))
             kept = [anchor]
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": parent["snapshot_id"],
-            "committed_at": time.time(),
-            # metadata-only commit: the v-dir is named but NEVER created
-            # (rollback/expire rmtree it harmlessly; pointing at the
-            # table dir instead would let rollback delete the table)
-            "path": os.path.join(self._tdir(table), f"v{sid}-meta"),
-            "row_count": parent["row_count"] - dropped_rows,
-            "sort_by": list(parent.get("sort_by") or ()),
-            "mode": "delete",
-            "segments": self._seal_files(table, sid, kept),
-            "delete_files": list(parent.get("delete_files") or []),
-            "delete_ranges": (
-                list(parent.get("delete_ranges") or [])
-                + [{"col": col, "ranges": ranges, "sid": sid}]
-            ),
-            "pos_delete_files": list(parent.get("pos_delete_files") or []),
-            "blooms": dict(parent.get("blooms") or {}),
-            "partition_specs": dict(parent.get("partition_specs") or {}),
-            "meta": {"dropped_files": len(parent_files) - len(kept)},
-        }
-        man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            self._drop_new_segments(table, snap["segments"], sid)
-            raise
-        return snap
+        sid = self._next_sid(man)
+        return self._commit_snapshot(
+            table,
+            man,
+            sid,
+            parent,
+            mode="delete",
+            files=kept,
+            row_count=parent["row_count"] - dropped_rows,
+            delete_ranges=[{"col": col, "ranges": ranges, "sid": sid}],
+            meta={"dropped_files": len(parent_files) - len(kept)},
+        )
 
     def delete_where(
         self,
@@ -1680,23 +1606,7 @@ class SnapshotCatalog:
             raise FileNotFoundError(f"no snapshots for table {table}")
         parent = man["snapshots"][-1]
         parent_files = self._snap_files(parent)
-        if not parent_files:
-            pdir = os.path.basename(parent["path"])
-            parent_files = [
-                {**f, "dir": pdir}
-                for f in _file_stats(
-                    parent["path"], tuple(parent.get("sort_by") or ())
-                )
-            ]
-            if not parent_files:
-                raise ValueError(
-                    f"cannot delete from snapshot "
-                    f"{parent['snapshot_id']}: no data files found "
-                    f"under {parent['path']}"
-                )
-        import uuid
-
-        sid = max(s["snapshot_id"] for s in man["snapshots"]) + 1
+        sid = self._next_sid(man)
         tdir = self._tdir(table)
         paths = [os.path.join(tdir, f["dir"], f["name"]) for f in parent_files]
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
@@ -1717,55 +1627,45 @@ class SnapshotCatalog:
                 F.col("_pos").alias("pos"),
             )
         )
-        ddir = os.path.join(tdir, f"v{sid}-{uuid.uuid4().hex[:8]}")
-        positions.repartition(n_files).write.mode("overwrite").parquet(ddir)
-        new_pdels = [
-            {
-                "dir": os.path.basename(ddir),
-                "name": f["name"],
-                "rows": f["rows"],
-                "bytes": os.path.getsize(os.path.join(ddir, f["name"])),
-                "sid": sid,
-            }
-            for f in _file_stats(ddir, ())
-        ]
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": parent["snapshot_id"],
-            "committed_at": time.time(),
-            "path": ddir,
-            "row_count": parent["row_count"],
-            "sort_by": list(parent.get("sort_by") or ()),
-            "mode": "delete",
-            "segments": self._seal_files(table, sid, parent_files),
-            "delete_files": list(parent.get("delete_files") or []),
-            "delete_ranges": list(parent.get("delete_ranges") or []),
-            "pos_delete_files": (
-                list(parent.get("pos_delete_files") or []) + new_pdels
-            ),
-            "blooms": dict(parent.get("blooms") or {}),
-            "partition_specs": dict(parent.get("partition_specs") or {}),
-            "meta": {},
-        }
-        man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            shutil.rmtree(ddir, ignore_errors=True)
-            self._drop_new_segments(table, snap["segments"], sid)
-            raise
-        return snap
+        ddir = self._new_dir(table, sid)
+        new_pdels = _delete_entries(
+            positions.repartition(n_files), ddir, sid=sid
+        )
+        return self._commit_snapshot(
+            table,
+            man,
+            sid,
+            parent,
+            mode="delete",
+            path=ddir,
+            new_dirs=[ddir],
+            files=parent_files,
+            row_count=parent["row_count"],
+            pos_delete_files=new_pdels,
+        )
 
     @staticmethod
     def _dir_sid(d: str) -> int:
-        """Commit sequence of a data dir ('v12' / 'v12-ab34cd' → 12);
-        legacy dirs without the v-prefix sort oldest (every delete
-        applies — conservative and correct for pre-delete-era files)."""
-        if d.startswith("v"):
-            head = d[1:].split("-", 1)[0]
-            if head.isdigit():
-                return int(head)
-        return 0
+        """Commit sequence of a catalog dir ('v12-ab34cd' → 12) — the
+        snapshot id its files were committed under, which orders them
+        against delete commits and schema versions."""
+        return int(d[1:].split("-", 1)[0])
+
+    def _stat_name(self, state: dict | None, frec: dict, col: str) -> str | None:
+        """Write-time name under which file ``frec`` records the CURRENT
+        column ``col`` (its stats, partition spec and bloom columns are
+        keyed by the names of the schema version it was written under):
+        a predicate on a renamed column maps through the field id.
+        None = the file's write-time schema has no column bound to the
+        current field id (``col`` was dropped and re-added: same-named
+        stats describe the RETIRED column) — callers treat the file as
+        having no stats for ``col``, which keeps it (conservative, like
+        Iceberg's null-stats)."""
+        if not state or not state["log"]:
+            return col
+        cur_id = {f["name"]: f["id"] for f in state["fields"]}.get(col)
+        then = self._fields_for_sid(state, self._dir_sid(frec["dir"]))
+        return {f["id"]: f["name"] for f in then}.get(cur_id)
 
     def _read_with_deletes(
         self,
@@ -1774,9 +1674,7 @@ class SnapshotCatalog:
         snap: dict,
         files: list[dict],
         merge: bool,
-        state: dict | None = None,
-        *,
-        state_from_caller: bool = False,
+        state: dict | None,
     ) -> DataFrame:
         """Read ``files`` applying the snapshot's equality-delete files
         AND metadata range deletes with Iceberg sequence semantics: a
@@ -1785,7 +1683,12 @@ class SnapshotCatalog:
         commit boundaries; each segment anti-joins the union of the
         key deletes that apply to it (broadcast when the key count is
         small) and filters NOT-in-ranges for the applicable range
-        deletes."""
+        deletes.
+
+        ``state`` is the schema state from the SAME manifest load that
+        resolved ``snap`` — one consistent snapshot+schema view (a
+        rename committed between two loads would translate this
+        snapshot's delete entries against the wrong version)."""
         from pyspark.sql import functions as F
 
         from eodal_spark import grid
@@ -1794,12 +1697,6 @@ class SnapshotCatalog:
         rdels = snap.get("delete_ranges") or []
         pdels = snap.get("pos_delete_files") or []
         tdir = self._tdir(table)
-        if not state_from_caller:
-            # back-compat load; callers that already hold the manifest
-            # pass state= for ONE consistent snapshot+schema view (a
-            # rename committed between two loads would translate this
-            # snapshot's delete entries against the wrong version)
-            state = self._load_manifest(table).get("schema")
         paths = [os.path.join(tdir, f["dir"], f["name"]) for f in files]
         if (not dels and not rdels and not pdels) or not files:
             return self._read_resolved(
@@ -1898,16 +1795,10 @@ class SnapshotCatalog:
             # BYTES (parquet-compressed footprint × a decompression
             # fudge), not by row count alone — 1M wide string keys can
             # be a several-hundred-MB broadcast that would override
-            # Spark's size-based threshold and OOM the driver.  Entries
-            # without a recorded size (pre-upgrade) get a conservative
-            # row cap; above the gates, Spark's own
-            # autoBroadcastJoinThreshold decides.
-            applicable = [d for d in dels if d["sid"] >= min_sid]
-            if all("bytes" in d for d in applicable):
-                small = sum(d["bytes"] for d in applicable) <= 32 << 20
-            else:
-                small = sum(d["rows"] for d in applicable) <= 100_000
-            return F.broadcast(k) if small else k
+            # Spark's size-based threshold and OOM the driver.  Above
+            # the gate, Spark's own autoBroadcastJoinThreshold decides.
+            small = sum(d["bytes"] for d in dels if d["sid"] >= min_sid)
+            return F.broadcast(k) if small <= 32 << 20 else k
 
         # position deletes (≡ Iceberg v2 position delete files): one
         # tagged base relation of (dfile, pos) rows, filtered per
@@ -1933,16 +1824,9 @@ class SnapshotCatalog:
                 .select("dfile", "pos")
                 .distinct()
             )
-            applicable = [p for p in pdels if p["sid"] >= min_sid]
-            # same conservative gate as keys_from: entries without a
-            # recorded size (foreign/migrated manifests) must NOT
-            # default to "tiny" — that would force-broadcast a position
-            # set of unknown size
-            if all("bytes" in p for p in applicable):
-                small = sum(p["bytes"] for p in applicable) <= 32 << 20
-            else:
-                small = sum(p["rows"] for p in applicable) <= 100_000
-            return F.broadcast(k) if small else k
+            # same byte gate as keys_from
+            small = sum(p["bytes"] for p in pdels if p["sid"] >= min_sid)
+            return F.broadcast(k) if small <= 32 << 20 else k
 
         # segment boundaries: files with sid in (prev_del, del] share
         # the same applicable-delete suffix {del, ...}
@@ -1952,19 +1836,18 @@ class SnapshotCatalog:
             lo = bounds[i - 1]
             hi = bounds[i] if i < len(bounds) else None
             seg = [
-                os.path.join(tdir, f["dir"], f["name"])
-                for f in files
-                if self._dir_sid(f["dir"]) > lo
+                p
+                for f, p in zip(files, paths)
+                if lo < self._dir_sid(f["dir"])
                 and (hi is None or self._dir_sid(f["dir"]) <= hi)
-            ] + ([p for f, p in zip(files, paths)
-                  if self._dir_sid(f["dir"]) == 0] if lo == 0 else [])
+            ]
             if not seg:
                 continue
             pk = pos_keys_from(hi) if hi is not None else None
             df = self._read_resolved(
                 spark,
                 table,
-                sorted(set(seg)),
+                sorted(seg),
                 merge=merge,
                 state=state,
                 with_pos_meta=pk is not None,
@@ -1998,15 +1881,14 @@ class SnapshotCatalog:
 
     def snapshot_as_of(self, table: str, ts) -> dict:
         """Newest snapshot committed at or before ``ts`` (epoch seconds
-        or datetime) — ≡ Iceberg ``TIMESTAMP AS OF`` resolution.
-        Snapshots predating the ``committed_at`` field sort oldest."""
+        or datetime) — ≡ Iceberg ``TIMESTAMP AS OF`` resolution."""
+        return self._as_of(table, self.snapshots(table), ts)
+
+    @staticmethod
+    def _as_of(table: str, snaps: list[dict], ts) -> dict:
         if hasattr(ts, "timestamp"):
             ts = ts.timestamp()
-        eligible = [
-            s
-            for s in self.snapshots(table)
-            if s.get("committed_at", 0.0) <= ts
-        ]
+        eligible = [s for s in snaps if s["committed_at"] <= ts]
         if not eligible:
             raise KeyError(
                 f"no snapshot of {table!r} committed at or before {ts}"
@@ -2046,15 +1928,7 @@ class SnapshotCatalog:
                 raise KeyError(f"no branch {branch!r} on table {table!r}")
             snapshot_id = b["head"]
         if as_of is not None:
-            ts = as_of.timestamp() if hasattr(as_of, "timestamp") else as_of
-            eligible = [
-                s for s in snaps if s.get("committed_at", 0.0) <= ts
-            ]
-            if not eligible:
-                raise KeyError(
-                    f"no snapshot of {table!r} committed at or before {ts}"
-                )
-            snap = eligible[-1]
+            snap = self._as_of(table, snaps, as_of)
         else:
             # explicit-id lookups also resolve branch snapshots (the
             # audit-by-id path); the default head stays main's
@@ -2065,18 +1939,14 @@ class SnapshotCatalog:
             )
             snap = self._get_snap(table, snapshot_id, lookup)
         files = self._snap_files(snap)
-        if files:
-            merge = len({f["dir"] for f in files}) > 1
-            return self._read_with_deletes(
-                spark,
-                table,
-                snap,
-                files,
-                merge,
-                state=man.get("schema"),
-                state_from_caller=True,
-            )
-        return spark.read.parquet(snap["path"])  # pre-stats snapshot
+        return self._read_with_deletes(
+            spark,
+            table,
+            snap,
+            files,
+            len({f["dir"] for f in files}) > 1,
+            man.get("schema"),
+        )
 
     def read_changes(
         self,
@@ -2109,11 +1979,11 @@ class SnapshotCatalog:
         for s in snaps:
             if (
                 lo["snapshot_id"] < s["snapshot_id"] <= hi["snapshot_id"]
-                and s.get("mode", "overwrite") != "append"
+                and s["mode"] != "append"
             ):
                 raise ValueError(
                     f"snapshot {s['snapshot_id']} is a "
-                    f"{s.get('mode', 'overwrite')} commit — the range "
+                    f"{s['mode']} commit — the range "
                     "holds no file-level delta; read it directly"
                 )
         seen = {(f["dir"], f["name"]) for f in self._snap_files(lo)}
@@ -2125,11 +1995,11 @@ class SnapshotCatalog:
         if not new:
             from pyspark.sql import functions as F
 
-            paths = self._file_paths(table, hi)
-            if not paths:  # legacy pre-stats snapshot: dir-level read
-                return spark.read.parquet(hi["path"]).where(F.lit(False))
             return self._read_resolved(
-                spark, table, paths, state=man.get("schema")
+                spark,
+                table,
+                self._file_paths(table, hi),
+                state=man.get("schema"),
             ).where(F.lit(False))
         return self._read_resolved(
             spark, table, new, state=man.get("schema")
@@ -2180,9 +2050,7 @@ class SnapshotCatalog:
             (
                 f["dir"],
                 f["name"],
-                # NULL (not a sentinel) for pre-upgrade entries without
-                # a recorded count — sums stay honest, gaps stay visible
-                int(f["rows"]) if "rows" in f else None,
+                int(f["rows"]),
                 json.dumps(f.get("stats", {}), sort_keys=True),
             )
             for f in self._snap_files(snap)
@@ -2245,14 +2113,14 @@ class SnapshotCatalog:
         # table's lineage, so an older marker no longer describes this
         # data and resurrecting it would corrupt the exactly-once guard
         for s in reversed(self.snapshots(table)):
-            if "checkpoint" in s.get("meta", {}):
+            if "checkpoint" in s["meta"]:
                 for k in ("checkpoint", "batch_id"):
                     if k in s["meta"]:
                         meta[k] = s["meta"][k]
                 break
             lineage_reset = (
-                s.get("mode", "overwrite") == "overwrite"
-                and "compacted_from" not in s.get("meta", {})
+                s["mode"] == "overwrite"
+                and "compacted_from" not in s["meta"]
             )
             if lineage_reset:
                 break
@@ -2300,20 +2168,11 @@ class SnapshotCatalog:
         the CURRENT spec are candidates (rewriting an old-spec dir is
         a relayout, not a binpack — use the full rewrite).  Returns
         None when no group qualifies: nothing to do, no empty commit."""
-        import uuid
-
-        from pyspark.sql import functions as F
-
         man = self._load_manifest(table)
         if not man["snapshots"]:
             raise FileNotFoundError(f"no snapshots for table {table}")
         snap = man["snapshots"][-1]
         parent_files = self._snap_files(snap)
-        if not parent_files:
-            raise ValueError(
-                f"cannot binpack pre-stats snapshot "
-                f"{snap['snapshot_id']} — run a full compact() first"
-            )
         tdir = self._tdir(table)
         pspecs = snap.get("partition_specs") or {}
         cur_spec = None
@@ -2348,34 +2207,19 @@ class SnapshotCatalog:
             n_out += max(1, -(-sum(sz for _, sz in lst) // target))
         if not inputs:
             return None
-        schema_state = man.get("schema")
-        in_multi = len({f["dir"] for f in inputs}) > 1
         rows = self._read_with_deletes(
             spark,
             table,
             snap,
             inputs,
-            merge=in_multi,
-            state=schema_state,
-            state_from_caller=True,
+            len({f["dir"] for f in inputs}) > 1,
+            man.get("schema"),
         )
         sort_by = tuple(snap.get("sort_by") or ())
         zorder = tuple(snap.get("zorder") or ())
         keys: list[str] = []
         if zorder:
-            from eodal_spark import grid
-
-            za, zb = zorder
-            b = rows.agg(F.min(za), F.max(za), F.min(zb), F.max(zb)).first()
-            zk = grid.zorder_key_2d(
-                F.col(za), F.col(zb),
-                b[0] if b[0] is not None else 0.0,
-                b[1] if b[1] is not None else 1.0,
-                b[2] if b[2] is not None else 0.0,
-                b[3] if b[3] is not None else 1.0,
-                bits=16,
-            )
-            rows = rows.withColumn("_zorder_key", zk)
+            rows = rows.withColumn("_zorder_key", _zorder_key(rows, zorder, 16))
             keys = ["_zorder_key"]
         elif sort_by:
             keys = list(sort_by)
@@ -2398,32 +2242,17 @@ class SnapshotCatalog:
             out = out.repartition(n_out)
         if zorder:
             out = out.drop("_zorder_key")
-        sid = max(
-            s["snapshot_id"]
-            for s in man["snapshots"] + (man.get("branch_snapshots") or [])
-        ) + 1
-        data_dir = os.path.join(tdir, f"v{sid}-{uuid.uuid4().hex[:8]}")
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts = spark.conf.get(ts_conf)
-        try:
-            spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-            if pv:
-                out.write.mode("overwrite").partitionBy(
-                    *[n for n, _ in pv]
-                ).parquet(data_dir)
-            else:
-                out.write.mode("overwrite").parquet(data_dir)
-        finally:
-            spark.conf.set(ts_conf, prev_ts)
+        sid = self._next_sid(man)
+        data_dir = self._new_dir(table, sid)
+        new_files = _write_files(
+            out,
+            data_dir,
+            sort_by if sort_by else zorder,
+            tuple(n for n, _ in pv),
+        )
         dname = os.path.basename(data_dir)
-        stat_cols = sort_by if sort_by else zorder
-        new_files = [
-            {**f, "dir": dname} for f in _file_stats(data_dir, stat_cols)
-        ]
-        if pv:
-            for f in new_files:
-                f["partition"] = _parse_partition(f["name"])
-        blooms = dict(snap.get("blooms") or {})
+        blooms = snap.get("blooms") or {}
+        new_blooms = {}
         bcfg = None
         for bcfg in blooms.values():
             pass
@@ -2431,47 +2260,34 @@ class SnapshotCatalog:
             _write_bloom_sidecar(
                 spark, data_dir, tuple(bcfg["cols"]), bcfg["bits"], bcfg["k"]
             )
-            blooms[dname] = dict(bcfg)
-        n_new = sum(f["rows"] for f in new_files)
-        in_rows = sum(int(f.get("rows") or 0) for f in inputs)
+            new_blooms[dname] = dict(bcfg)
         inset = {(f["dir"], f["name"]) for f in inputs}
         untouched = [
             f for f in parent_files if (f["dir"], f["name"]) not in inset
         ]
-        new_pspecs = dict(pspecs)
-        if pv:
-            new_pspecs[dname] = [list(e) for e in cur_spec]
-        segments = self._seal_files(table, sid, untouched + new_files)
-        new_snap = {
-            "snapshot_id": sid,
-            "parent_id": snap["snapshot_id"],
-            "committed_at": time.time(),
-            "path": data_dir,
-            "row_count": snap["row_count"] - in_rows + n_new,
-            "sort_by": list(sort_by),
-            "zorder": list(zorder),
-            "mode": "compact",
-            "segments": segments,
-            "delete_files": list(snap.get("delete_files") or []),
-            "delete_ranges": list(snap.get("delete_ranges") or []),
-            "pos_delete_files": list(snap.get("pos_delete_files") or []),
-            "blooms": blooms,
-            "partition_specs": new_pspecs,
-            "meta": {
+        return self._commit_snapshot(
+            table,
+            man,
+            sid,
+            snap,
+            mode="compact",
+            path=data_dir,
+            new_dirs=[data_dir],
+            files=untouched + new_files,
+            row_count=snap["row_count"]
+            - sum(int(f.get("rows") or 0) for f in inputs)
+            + sum(f["rows"] for f in new_files),
+            zorder=zorder,
+            blooms=new_blooms,
+            partition_specs=(
+                {dname: [list(e) for e in cur_spec]} if pv else {}
+            ),
+            meta={
                 "binpack_inputs": len(inputs),
                 "binpack_groups": n_groups,
                 "compacted_from": snap["snapshot_id"],
             },
-        }
-        man["snapshots"].append(new_snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            shutil.rmtree(_bloom_sidecar(data_dir), ignore_errors=True)
-            self._drop_new_segments(table, segments, sid)
-            raise
-        return new_snap
+        )
 
     # -- named refs (≡ Iceberg tags) ------------------------------------
 
@@ -2651,39 +2467,24 @@ class SnapshotCatalog:
                 "by main — cherry-pick would double-count its rows"
             )
         own = [f for f in self._snap_files(src) if f["dir"] == own_dir]
-        sid = max(s["snapshot_id"] for s in all_snaps) + 1
-        blooms = dict(head.get("blooms") or {})
-        if own_dir in (src.get("blooms") or {}):
-            blooms[own_dir] = src["blooms"][own_dir]
-        pspecs = dict(head.get("partition_specs") or {})
-        if own_dir in (src.get("partition_specs") or {}):
-            pspecs[own_dir] = src["partition_specs"][own_dir]
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": head["snapshot_id"],
-            "committed_at": time.time(),
-            # metadata-only commit: the picked files live in the source
-            # snapshot's dir; this v-dir is named but never created
-            "path": os.path.join(self._tdir(table), f"v{sid}-meta"),
-            "row_count": head["row_count"]
+        # metadata-only commit: the picked files live in the source
+        # snapshot's dir
+        return self._commit_snapshot(
+            table,
+            man,
+            self._next_sid(man),
+            head,
+            mode="append",
+            files=head_files + own,
+            row_count=head["row_count"]
             + sum(int(f.get("rows") or 0) for f in own),
-            "sort_by": list(head.get("sort_by") or ()),
-            "mode": "append",
-            "segments": self._seal_files(table, sid, head_files + own),
-            "delete_files": list(head.get("delete_files") or []),
-            "delete_ranges": list(head.get("delete_ranges") or []),
-            "pos_delete_files": list(head.get("pos_delete_files") or []),
-            "blooms": blooms,
-            "partition_specs": pspecs,
-            "meta": {"cherrypicked_from": snapshot_id},
-        }
-        man["snapshots"].append(snap)
-        try:
-            self._commit_manifest(table, man)
-        except ConcurrentCommitError:
-            self._drop_new_segments(table, snap["segments"], sid)
-            raise
-        return snap
+            # the picked dir's own bloom config and partition spec
+            blooms={d: c for d, c in src["blooms"].items() if d == own_dir},
+            partition_specs={
+                d: c for d, c in src["partition_specs"].items() if d == own_dir
+            },
+            meta={"cherrypicked_from": snapshot_id},
+        )
 
     def remove_orphan_files(
         self,
@@ -2716,12 +2517,7 @@ class SnapshotCatalog:
             fcntl.flock(fd, fcntl.LOCK_EX)
             man = self._load_manifest(table)
             all_snaps = man["snapshots"] + (man.get("branch_snapshots") or [])
-            live: set[str] = set()
-            for s in all_snaps:
-                live.add(os.path.basename(s["path"]))
-                live |= self._snap_dirs(s)
-                live |= {d["dir"] for d in (s.get("delete_files") or [])}
-                live |= {d["dir"] for d in (s.get("pos_delete_files") or [])}
+            live = self._live_dirs(all_snaps)
             # a live dir's bloom sidecar is live (named <dir>-bloom)
             live |= {d + BLOOM_SUFFIX for d in live}
             tdir = self._tdir(table)
@@ -2749,26 +2545,18 @@ class SnapshotCatalog:
             # age rail as data dirs, for the same in-flight-writer race
             live_segs = self._live_segments(all_snaps)
             segdir = self._seg_dir(tdir)
-            if os.path.isdir(segdir):
-                for name in sorted(os.listdir(segdir)):
-                    p = os.path.join(segdir, name)
-                    try:
-                        stale = os.path.getmtime(p) <= cutoff
-                    except OSError:
-                        continue
-                    if (
-                        name.startswith("seg-")
-                        and name not in live_segs
-                        and stale
-                    ):
-                        orphans.append(os.path.join("manifests", name))
-                        if not dry_run:
-                            _SEG_CACHE.pop(p, None)
-                            try:
-                                os.unlink(p)
-                            except OSError:
-                                pass
-            return orphans
+            dead_segs = [
+                name
+                for name in sorted(
+                    os.listdir(segdir) if os.path.isdir(segdir) else []
+                )
+                if name.startswith("seg-")
+                and name not in live_segs
+                and old_enough(os.path.join("manifests", name))
+            ]
+            if not dry_run:
+                self._unlink_segments(table, dead_segs)
+            return orphans + [os.path.join("manifests", n) for n in dead_segs]
         finally:
             os.close(fd)
 
@@ -2808,43 +2596,14 @@ class SnapshotCatalog:
         # branch snapshots share data dirs with their (possibly
         # expired) main ancestors — their references keep dirs alive
         alive = kept + (man.get("branch_snapshots") or [])
-        live_dirs = set().union(*(self._snap_dirs(s) for s in alive))
-        live_dirs |= {
-            d["dir"] for s in alive for d in (s.get("delete_files") or [])
-        }
-        live_dirs |= {
-            d["dir"] for s in alive for d in (s.get("pos_delete_files") or [])
-        }
-        live_dirs |= {os.path.basename(s["path"]) for s in alive}
         man["snapshots"] = kept
         self._commit_manifest(table, man)
-        dead_dirs = {
-            d
-            for s in dropped
-            for d in (
-                self._snap_dirs(s)
-                | {df["dir"] for df in (s.get("delete_files") or [])}
-                | {df["dir"] for df in (s.get("pos_delete_files") or [])}
-                | {os.path.basename(s["path"])}
-            )
-        } - live_dirs
-        for d in dead_dirs:
-            shutil.rmtree(
-                os.path.join(self._tdir(table), d), ignore_errors=True
-            )
-            shutil.rmtree(
-                os.path.join(self._tdir(table), d + BLOOM_SUFFIX),
-                ignore_errors=True,
-            )
+        for d in self._live_dirs(dropped) - self._live_dirs(alive):
+            _rm_data_dir(os.path.join(self._tdir(table), d))
         # manifest-tier GC: segments only expired snapshots referenced
-        dead_segs = self._live_segments(dropped) - self._live_segments(alive)
-        segdir = self._seg_dir(self._tdir(table))
-        for name in dead_segs:
-            _SEG_CACHE.pop(os.path.join(segdir, name), None)
-            try:
-                os.unlink(os.path.join(segdir, name))
-            except OSError:
-                pass
+        self._unlink_segments(
+            table, self._live_segments(dropped) - self._live_segments(alive)
+        )
         return [s["snapshot_id"] for s in dropped]
 
     def _partition_prune(
@@ -3104,20 +2863,13 @@ class SnapshotCatalog:
                     f"ranges[{c!r}] is {r!r} — pass concrete (lo, hi) "
                     "range(s), or omit the column to skip filtering on it"
                 )
-        def _bound(v):
-            # the SAME coercion the manifest writer applies to stats
-            # (bytes → str, datetime/date → isoformat) — an int/datetime
-            # user range must compare against JSON-ified stats
-            # consistently, not raise TypeError mid-prune
-            if isinstance(v, bytes):
-                return v.decode("utf-8", "replace")
-            if hasattr(v, "isoformat"):
-                return v.isoformat()
-            return v
-
+        # bounds go through the SAME coercion the manifest writer
+        # applies to stats — an int/datetime user range must compare
+        # against JSON-ified stats consistently, not raise TypeError
+        # mid-prune
         norm = {
             c: [
-                (_bound(lo), _bound(hi))
+                (_stat_bound(lo), _stat_bound(hi))
                 for lo, hi in (r if isinstance(r, list) else [r])
             ]
             for c, r in ranges.items()
@@ -3125,9 +2877,8 @@ class SnapshotCatalog:
         # merge behavior must reflect the SNAPSHOT's layout, not the
         # post-pruning survivor set — computed before any segment skip
         snap_multi_dir = len(self._snap_dirs(snap)) > 1
-        schema_log = (man.get("schema") or {}).get("log")
-        segs = snap.get("segments")
-        if segs is not None and not schema_log:
+        schema_state = man.get("schema")
+        if not (schema_state or {}).get("log"):
             # manifest-LIST-level pruning (≡ Iceberg's manifest-list
             # partition summaries): drop whole segments whose coarse
             # bounds provably exclude every range BEFORE loading any
@@ -3138,14 +2889,12 @@ class SnapshotCatalog:
             # only the per-file pass knows each file's field-id mapping
             # (kept = conservative, never wrongly pruned).
             tdir = os.path.dirname(snap["path"])
-            files = []
-            for ref in segs:
-                if self._seg_ref_excluded(ref, norm):
-                    continue
-                files.extend(
-                    {**f, "_seg": ref["name"]}
-                    for f in self._load_segment(tdir, ref["name"])
-                )
+            files = [
+                f
+                for ref in snap["segments"]
+                if not self._seg_ref_excluded(ref, norm)
+                for f in self._load_segment(tdir, ref["name"])
+            ]
         else:
             files = self._snap_files(snap)
         # schema evolution: per-file stats are keyed by WRITE-TIME
@@ -3153,119 +2902,81 @@ class SnapshotCatalog:
         # its file's schema version bound to the same field id —
         # otherwise every pre-rename file loses pruning (kept, never
         # wrongly dropped, but the scan degrades to a full read)
-        schema_state = man.get("schema")
-        cur_id_by_name = (
-            {f["name"]: f["id"] for f in schema_state["fields"]}
-            if schema_state
-            else {}
-        )
-
-        def _stat_name(frec: dict, col: str) -> str | None:
-            # None = the file's write-time schema has no column bound to
-            # the CURRENT field id (drop + re-add of the same name):
-            # its same-named stats describe the RETIRED column, so the
-            # file must be kept un-pruned (the current column reads as
-            # NULL there — conservative, like Iceberg's null-stats)
-            if not schema_state or not schema_state["log"]:
-                return col
-            then = self._fields_for_sid(
-                schema_state, self._dir_sid(frec["dir"])
-            )
-            by_id = {f["id"]: f["name"] for f in then}
-            return by_id.get(cur_id_by_name.get(col))
-
-        if files or segs is not None:
-            # segs with every segment pruned is "provably empty", NOT a
-            # pre-stats snapshot: flow through to the schema-preserving
-            # empty-relation branch below, never to a full read
-            files = self._partition_prune(
-                spark, snap, files, norm, eq, _stat_name
-            )
-            keep = []
-            for frec in files:
-                stats = frec.get("stats", {})
-                ok = True
-                for col, rs in norm.items():
-                    st = stats.get(_stat_name(frec, col))
-                    if st is None or st["min"] is None or st["max"] is None:
-                        continue  # no stats → cannot prune this file
-                    stat_is_str = isinstance(st["min"], str)
-                    if stat_is_str and _ISO_TS.match(st["min"]):
-                        # stats are 'T'-separated isoformat; a Spark-
-                        # style 'YYYY-MM-DD HH:MM:SS' bound would sort
-                        # BEFORE every 'T' form lexicographically and
-                        # silently prune wrong files — normalize it
-                        rs = [
-                            (
-                                _iso_t(lo) if isinstance(lo, str) else lo,
-                                _iso_t(hi) if isinstance(hi, str) else hi,
-                            )
-                            for lo, hi in rs
-                        ]
-                    if any(
-                        isinstance(lo, str) != stat_is_str
-                        or isinstance(hi, str) != stat_is_str
+        stat_name = functools.partial(self._stat_name, schema_state)
+        files = self._partition_prune(spark, snap, files, norm, eq, stat_name)
+        keep = []
+        for frec in files:
+            stats = frec.get("stats", {})
+            ok = True
+            for col, rs in norm.items():
+                st = stats.get(stat_name(frec, col))
+                if st is None or st["min"] is None or st["max"] is None:
+                    continue  # no stats → cannot prune this file
+                stat_is_str = isinstance(st["min"], str)
+                if stat_is_str and _ISO_TS.match(st["min"]):
+                    # stats are 'T'-separated isoformat; a Spark-style
+                    # 'YYYY-MM-DD HH:MM:SS' bound would sort BEFORE
+                    # every 'T' form lexicographically and silently
+                    # prune wrong files — normalize it
+                    rs = [
+                        (
+                            _iso_t(lo) if isinstance(lo, str) else lo,
+                            _iso_t(hi) if isinstance(hi, str) else hi,
+                        )
                         for lo, hi in rs
-                    ):
-                        raise TypeError(
-                            f"ranges[{col!r}] bounds are "
-                            f"{type(rs[0][0]).__name__} but the manifest "
-                            f"stats for {col!r} are "
-                            f"{type(st['min']).__name__} — pass bounds of "
-                            "the stored column's type (timestamps as "
-                            "datetime/isoformat strings)"
-                        )
-                    if not any(
-                        st["min"] <= hi and st["max"] >= lo for lo, hi in rs
-                    ):
-                        ok = False
-                        break
-                if ok:
-                    keep.append(frec)
-            if eq and (snap.get("blooms") or {}):
-                keep = self._bloom_prune(
-                    spark, table, snap, keep, eq, _stat_name
-                )
-            if not keep:
-                from pyspark.sql import functions as F
+                    ]
+                if any(
+                    isinstance(lo, str) != stat_is_str
+                    or isinstance(hi, str) != stat_is_str
+                    for lo, hi in rs
+                ):
+                    raise TypeError(
+                        f"ranges[{col!r}] bounds are "
+                        f"{type(rs[0][0]).__name__} but the manifest "
+                        f"stats for {col!r} are "
+                        f"{type(st['min']).__name__} — pass bounds of "
+                        "the stored column's type (timestamps as "
+                        "datetime/isoformat strings)"
+                    )
+                if not any(
+                    st["min"] <= hi and st["max"] >= lo for lo, hi in rs
+                ):
+                    ok = False
+                    break
+            if ok:
+                keep.append(frec)
+        if eq and (snap.get("blooms") or {}):
+            keep = self._bloom_prune(spark, table, snap, keep, eq, stat_name)
+        if not keep:
+            from pyspark.sql import functions as F
 
-                # schema-preserving empty: the optimizer folds
-                # filter(false) to an empty LocalRelation — no scan.
-                # ONE file per dir suffices for the merged schema (a
-                # dir = one write = one physical schema), so a no-match
-                # scan on a 100k-file table opens n_dirs footers, not
-                # 100k
-                probe, probed = [], set()
-                for frec in self._snap_files(snap):
-                    if frec["dir"] not in probed:
-                        probed.add(frec["dir"])
-                        probe.append(
-                            os.path.join(
-                                self._tdir(table), frec["dir"], frec["name"]
-                            )
+            # schema-preserving empty: the optimizer folds filter(false)
+            # to an empty LocalRelation — no scan.  ONE file per dir
+            # suffices for the merged schema (a dir = one write = one
+            # physical schema), so a no-match scan on a 100k-file table
+            # opens n_dirs footers, not 100k
+            probe, probed = [], set()
+            for frec in self._snap_files(snap):
+                if frec["dir"] not in probed:
+                    probed.add(frec["dir"])
+                    probe.append(
+                        os.path.join(
+                            self._tdir(table), frec["dir"], frec["name"]
                         )
-                df = self._read_resolved(
-                    spark,
-                    table,
-                    probe or self._file_paths(table, snap),
-                    merge=snap_multi_dir,
-                    state=schema_state,
-                ).where(F.lit(False))
-            else:
-                # delete-aware: equality deletes apply to the surviving
-                # files with the same sequence semantics as read()
-                df = self._read_with_deletes(
-                    spark,
-                    table,
-                    snap,
-                    keep,
-                    merge=snap_multi_dir,
-                    state=schema_state,
-                    state_from_caller=True,
-                )
-        else:  # pre-stats snapshot: fall back to a full read
-            df = spark.read.parquet(snap["path"])
-        import functools
+                    )
+            df = self._read_resolved(
+                spark,
+                table,
+                probe,
+                merge=snap_multi_dir,
+                state=schema_state,
+            ).where(F.lit(False))
+        else:
+            # delete-aware: equality deletes apply to the surviving
+            # files with the same sequence semantics as read()
+            df = self._read_with_deletes(
+                spark, table, snap, keep, snap_multi_dir, schema_state
+            )
         import operator
 
         from eodal_spark import grid
@@ -3307,17 +3018,11 @@ class SnapshotCatalog:
         ]
         self._commit_manifest(table, man)
         for s in dropped:
-            shutil.rmtree(s["path"], ignore_errors=True)
-            shutil.rmtree(_bloom_sidecar(s["path"]), ignore_errors=True)
+            _rm_data_dir(s["path"])
         alive = man["snapshots"] + (man.get("branch_snapshots") or [])
-        dead_segs = self._live_segments(dropped) - self._live_segments(alive)
-        segdir = self._seg_dir(self._tdir(table))
-        for name in dead_segs:
-            _SEG_CACHE.pop(os.path.join(segdir, name), None)
-            try:
-                os.unlink(os.path.join(segdir, name))
-            except OSError:
-                pass
+        self._unlink_segments(
+            table, self._live_segments(dropped) - self._live_segments(alive)
+        )
 
 
 def write_bucketed(

@@ -41,6 +41,32 @@ def test_append_stage_metrics(spark, tmp_path):
     assert stored.agg(F.sum("rows")).first()[0] == 500
 
 
+def test_append_stage_metrics_is_one_action(spark, tmp_path):
+    """The metrics write is the call's only Spark action: the lineage
+    totals are observed on it, so the stage's plan runs once and no
+    second aggregation job follows.  Counted with AQE off, where one
+    action is one job (AQE runs each exchange as a job of its own)."""
+    d = str(tmp_path / "metrics1")
+    os.makedirs(d)
+    df = spark.range(1000).repartition(5)
+    sc = spark.sparkContext
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("stage_metrics_jobs", "append_stage_metrics job count")
+    try:
+        rec = M.append_stage_metrics(df, "s1", d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    jobs = sc.statusTracker().getJobIdsForGroup("stage_metrics_jobs")
+    assert rec == {"stage": "s1", "partitions": 5, "rows": 1000}
+    assert len(jobs) == 1, f"{len(jobs)} jobs"
+    stored = spark.read.parquet(os.path.join(d, "partition_metrics"))
+    assert stored.count() == 5
+    assert stored.agg(F.sum("rows")).first()[0] == 1000
+
+
 def test_snapshot_catalog_time_travel(spark, tmp_path):
     cat = SnapshotCatalog(str(tmp_path / "cat"))
     s1 = cat.write(spark.range(10), "t")
@@ -664,25 +690,6 @@ def test_read_changes_inverted_range_raises(spark, tmp_path):
         cat.read_changes(spark, "t", from_snapshot=2, to_snapshot=1)
 
 
-def test_append_onto_legacy_snapshot_reconstructs_files(spark, tmp_path):
-    """A pre-feature manifest (files: []) must not lose the parent's
-    rows when appended onto — the file list is reconstructed from the
-    data dir."""
-    import json as J
-
-    cat = SnapshotCatalog(str(tmp_path / "leg_cat"))
-    cat.write(spark.range(100), "t", n_files=2)
-    # simulate a legacy manifest: strip the files list
-    mp = os.path.join(str(tmp_path / "leg_cat"), "t", "manifest.json")
-    man = J.load(open(mp))
-    man["snapshots"][0].pop("segments", None)
-    man["snapshots"][0]["files"] = []
-    J.dump(man, open(mp, "w"))
-    s2 = cat.write(spark.range(100, 150), "t", n_files=1, mode="append")
-    assert s2["row_count"] == 150
-    assert cat.read(spark, "t").count() == 150
-
-
 def test_append_schema_evolution_merges(spark, tmp_path):
     """Additive column evolution: an append batch may carry a NEW
     column; snapshot reads schema-merge across dirs so old rows surface
@@ -869,8 +876,8 @@ def test_equality_deletes_stack_and_guard(spark, tmp_path):
 
 def test_timestamp_as_of_time_travel(spark, tmp_path):
     """TIMESTAMP AS OF: reads resolve to the newest snapshot committed
-    at or before the given instant; pre-field legacy snapshots sort
-    oldest; a timestamp before every commit raises."""
+    at or before the given instant; a timestamp before every commit
+    raises."""
     import time as _time
 
     cat = SnapshotCatalog(str(tmp_path / "asof_cat"))
@@ -1111,10 +1118,10 @@ def test_range_delete_space_separated_bounds_no_data_loss(spark, tmp_path):
 
 def test_full_table_range_delete_keeps_table_usable(spark, tmp_path):
     """A delete_range covering EVERY file must not brick the table: a
-    files==[] snapshot would be read as legacy pre-stats and chase the
-    never-created v{sid}-meta dir.  A schema-anchor file is kept (its
-    rows removed by the residual filter), so read/scan return a
-    schema-correct empty relation and append/compact keep working."""
+    snapshot with no files has no schema to read.  A schema-anchor file
+    is kept (its rows removed by the residual filter), so read/scan
+    return a schema-correct empty relation and append/compact keep
+    working."""
     cat = SnapshotCatalog(str(tmp_path / "rdel_full"))
     df = spark.range(1_000).select(
         F.col("id").alias("cell_id"), (F.col("id") * 3).alias("v")
@@ -1686,6 +1693,27 @@ def test_schema_evolution_rename_drop_add(spark, tmp_path):
         cat.rename_column(spark, "t", "nope", "z")
     with pytest.raises(ValueError):
         cat.add_column(spark, "t", "y")
+
+
+def test_schema_evolution_rename_on_partitioned_table(spark, tmp_path):
+    """Hive-partitioned files nest under pv= subdirs; each file still
+    binds its columns through the schema version of its COMMIT dir, so
+    rows appended after a rename keep their values through the next
+    rename."""
+    cat = SnapshotCatalog(str(tmp_path / "evo_pv"))
+    spec = [("bucket", 2, "k")]
+    cat.write(
+        spark.range(6).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v")),
+        "t", partition_by=spec,
+    )
+    cat.rename_column(spark, "t", "v", "w")
+    cat.write(
+        spark.range(6, 9).select(F.col("id").alias("k"), (F.col("id") * 10).alias("w")),
+        "t", mode="append", partition_by=spec,
+    )
+    cat.rename_column(spark, "t", "w", "x")
+    got = sorted(tuple(r) for r in cat.read(spark, "t").collect())
+    assert got == [(i, i * 10) for i in range(9)]
 
 
 def test_schema_evolution_deletes_and_scan_across_rename(spark, tmp_path):
@@ -2406,6 +2434,131 @@ def test_wap_publish_refuses_non_fast_forward_cherrypick_applies(
     cat.drop_branch("t", "audit")
     # the picked rows survive the branch drop (main references the dir)
     assert cat.read(spark, "t").count() == 37
+
+
+@pytest.mark.parametrize(
+    "main_commit", ["delete_keys", "upsert", "delete_range", "delete_where"]
+)
+def test_branch_append_and_main_commit_get_distinct_ids(
+    spark, tmp_path, main_commit
+):
+    """Branch and main snapshots share one id space for EVERY commit
+    kind: a delete/upsert on main after a branch append must not reuse
+    the branch snapshot's id — with a duplicate, cherry-pick would
+    resolve the main commit instead of the branch append."""
+    cat = SnapshotCatalog(str(tmp_path / f"sid_{main_commit}"))
+    cat.write(spark.range(10), "t", n_files=1)
+    cat.create_branch("t", "audit")
+    staged = cat.write(
+        spark.range(100, 105), "t", n_files=1, mode="append", branch="audit"
+    )
+    if main_commit == "delete_keys":
+        cat.delete_keys(spark, "t", spark.range(3))
+        main_ids = list(range(3, 10))
+    elif main_commit == "upsert":
+        cat.upsert(spark, spark.range(8, 12), "t", ["id"])
+        main_ids = list(range(12))
+    elif main_commit == "delete_range":
+        cat.delete_range("t", "id", (0, 2))
+        main_ids = list(range(3, 10))
+    else:
+        cat.delete_where(spark, "t", "id < 3")
+        main_ids = list(range(3, 10))
+    man = cat._load_manifest("t")
+    ids = [
+        s["snapshot_id"] for s in man["snapshots"] + man["branch_snapshots"]
+    ]
+    assert len(ids) == len(set(ids)), ids
+    picked = cat.cherrypick_snapshot("t", staged["snapshot_id"])
+    assert picked["snapshot_id"] not in ids
+    got = sorted(r["id"] for r in cat.read(spark, "t").collect())
+    assert got == main_ids + list(range(100, 105))
+
+
+def test_snapshot_record_keys_per_commit_kind(spark, tmp_path):
+    """Every commit kind writes the same manifest record shape it always
+    has — catalogs written before and after a change to the commit path
+    read back alike.  The layout-owning kinds (write, binpack) record
+    ``zorder``; the delete, upsert and cherry-pick commits do not."""
+    full = {
+        "snapshot_id", "parent_id", "committed_at", "path", "row_count",
+        "sort_by", "zorder", "mode", "segments", "delete_files",
+        "delete_ranges", "pos_delete_files", "blooms", "partition_specs",
+        "meta",
+    }
+    cat = SnapshotCatalog(str(tmp_path / "keys_cat"))
+
+    def ks(lo, hi):
+        return spark.range(lo, hi).select(F.col("id").alias("k"))
+
+    got = {"overwrite": cat.write(ks(0, 40), "t", sort_by=("k",), n_files=1)}
+    cat.create_branch("t", "b")
+    staged = cat.write(ks(100, 103), "t", mode="append", branch="b", n_files=1)
+    got["branch_append"] = staged
+    got["append"] = cat.write(ks(40, 50), "t", mode="append", n_files=1)
+    got["delete_keys"] = cat.delete_keys(spark, "t", ks(0, 2))
+    got["delete_range"] = cat.delete_range("t", "k", (2, 3))
+    got["delete_where"] = cat.delete_where(spark, "t", "k = 4")
+    got["upsert"] = cat.upsert(spark, ks(5, 7), "t", ["k"])
+    got["compact"] = cat.compact(spark, "t", target_file_bytes=1 << 30)
+    got["cherrypick"] = cat.cherrypick_snapshot("t", staged["snapshot_id"])
+    man = cat._load_manifest("t")
+    on_disk = {
+        s["snapshot_id"]: set(s)
+        for s in man["snapshots"] + man["branch_snapshots"]
+    }
+    for kind, snap in got.items():
+        want = (
+            full
+            if kind in ("overwrite", "branch_append", "append", "compact")
+            else full - {"zorder"}
+        )
+        assert set(snap) == want, kind
+        assert on_disk[snap["snapshot_id"]] == want, kind
+    assert cat.read(spark, "t").count() == 50 - 5 + 3
+
+
+def test_lost_commit_removes_its_files(spark, tmp_path):
+    """A commit attempt that loses the manifest CAS removes its own
+    data/delete dirs, bloom sidecars and new manifest segments, for
+    every commit kind; the table is left exactly as it was."""
+    from eodal_spark.sources.catalog import ConcurrentCommitError
+
+    root = tmp_path / "lost_cat"
+    cat = SnapshotCatalog(str(root))
+
+    def ks(lo, hi):
+        return spark.range(lo, hi).select(F.col("id").alias("k"))
+
+    cat.write(ks(0, 20), "t", sort_by=("k",), n_files=2, bloom_cols=("k",))
+    tdir = root / "t"
+
+    def listing():
+        return sorted(os.listdir(tdir)), sorted(os.listdir(tdir / "manifests"))
+
+    before = listing()
+
+    def lose(table, man):
+        raise ConcurrentCommitError("synthetic race")
+
+    cat._commit_manifest = lose
+    attempts = {
+        "append": lambda: cat.write(
+            ks(20, 30), "t", mode="append", bloom_cols=("k",)
+        ),
+        "upsert": lambda: cat.upsert(spark, ks(5, 8), "t", ["k"]),
+        "delete_keys": lambda: cat.delete_keys(spark, "t", ks(0, 2)),
+        "delete_where": lambda: cat.delete_where(spark, "t", "k < 3"),
+        "delete_range": lambda: cat.delete_range("t", "k", (0, 3)),
+        "compact": lambda: cat.compact(spark, "t", target_file_bytes=1 << 30),
+    }
+    for kind, attempt in attempts.items():
+        with pytest.raises(ConcurrentCommitError):
+            attempt()
+        assert listing() == before, kind
+    del cat._commit_manifest
+    assert len(cat.snapshots("t")) == 1
+    assert cat.read(spark, "t").count() == 20
 
 
 def test_wap_cherrypick_guards(spark, tmp_path):
